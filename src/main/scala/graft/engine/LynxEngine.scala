@@ -1,7 +1,6 @@
 package graft.engine
 
 import java.io.File
-import java.sql.Timestamp
 import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement,
   LogicalPlan}
 import org.apache.spark.sql.types._
 
-import graft.buffer.{MemBuffer, MeasurementsView}
+import graft.buffer.{BufferScan, MemBuffer, MeasurementsView}
 import graft.core.WriteRequest
 import graft.tier.ParquetTier
 import graft.wal.Wal
@@ -27,9 +26,12 @@ final case class QueryResult(schema: StructType, rows: Seq[Row])
   * buffer" (lynx.rs:32-33) — then buffer insert.
   *
   * Query path (reference lynx.rs:70-148): gatekeeper-parse the SQL,
-  * snapshot the namespace, build DataFrames with the dynamically
-  * inferred schema, register temp views, delegate to spark.sql —
-  * Catalyst plays the role DataFusion plays behind lynx.rs:141.
+  * snapshot the buffered tables it references (chunk references plus
+  * published lengths — no rows are copied under the locks), scan each
+  * snapshot as a DataFrame of chunk-sized input partitions with the
+  * dynamically inferred schema, register temp views, delegate to
+  * spark.sql — Catalyst plays the role DataFusion plays behind
+  * lynx.rs:141, which hands DataFusion one Arrow batch.
   *
   * Improvements over the reference, by design (SURVEY.md §3.4):
   *  - per-query `SparkSession.newSession()` gives each request an
@@ -447,7 +449,9 @@ class LynxEngine(
     writeLock.synchronized {
       tier.foreach { t =>
         buffer.drainTable(namespace, table).foreach { parts =>
-          val df = LynxEngine.toDataFrame(spark, parts).withColumn(
+          // one input partition per day: the partitioned write below
+          // then stages one file per day, however many chunks it spans
+          val df = BufferScan.frame(spark, parts, splitPerDay = true).withColumn(
             ParquetTier.DayCol,
             org.apache.spark.sql.functions.date_format(
               org.apache.spark.sql.functions.col("timestamp"),
@@ -848,7 +852,7 @@ class LynxEngine(
     val (snapshot, pinned, tierHasNs, cacheKey) = writeLock.synchronized {
       // a time-travel read sees ONLY what the pinned manifest version
       // published: unsealed buffer rows are by definition newer
-      val bufTables = buffer.tables(namespace)
+      val bufTables = buffer.tables(namespace, tables)
       val mem = if (asOfVersion.isDefined) None else bufTables
       val (acq, hasNs) = tier match {
         case None =>
@@ -1805,45 +1809,19 @@ object LynxEngine {
     }
   }
 
-  /** Dynamic schema inference + row→columnar conversion (reference
-    * lynx.rs:93-134): fixed non-nullable `timestamp`/`value` columns,
-    * one nullable string column per tag key in the union of all tag
-    * keys; rows missing a tag get NULL; numeric tags stringify.
+  /** Dynamic schema inference (reference lynx.rs:93-134): fixed
+    * non-nullable `timestamp`/`value` columns, one nullable string
+    * column per tag key carried by the snapshot's rows, sorted; rows
+    * missing a tag get NULL; numeric tags stringify. Reads the
+    * snapshot's key lists, not its rows.
     */
-  def inferSchema(parts: TreeMap[String, MeasurementsView]): StructType = {
-    val tagKeys = parts.valuesIterator
-      .flatMap(_.metadata.iterator.flatMap(_.keysIterator))
-      .toSeq.distinct.sorted
-    StructType(
-      StructField("timestamp", TimestampType, nullable = false) +:
-      StructField("value", StringType, nullable = false) +:
-      tagKeys.map(k => StructField(k, StringType, nullable = true)))
-  }
+  def inferSchema(parts: TreeMap[String, MeasurementsView]): StructType =
+    BufferScan.schema(parts)
 
+  /** A table snapshot as a DataFrame: a scan over its column chunks
+    * (see [[graft.buffer.BufferScan]]).
+    */
   def toDataFrame(spark: SparkSession,
-      parts: TreeMap[String, MeasurementsView]): DataFrame = {
-    val schema = inferSchema(parts)
-    val tagKeys = schema.fields.drop(2).map(_.name)
-    val rows = new java.util.ArrayList[Row]()
-    parts.valuesIterator.foreach { m =>
-      var i = 0
-      while (i < m.timestamps.length) {
-        val micros = m.timestamps(i)
-        val ts = new Timestamp(Math.floorDiv(micros, 1000L))
-        ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-        val tags = m.metadata(i)
-        val cells = new Array[Any](2 + tagKeys.length)
-        cells(0) = ts
-        cells(1) = m.values(i)
-        var j = 0
-        while (j < tagKeys.length) {
-          cells(2 + j) = tags.get(tagKeys(j)).map(_.render).orNull
-          j += 1
-        }
-        rows.add(Row.fromSeq(cells.toIndexedSeq))
-        i += 1
-      }
-    }
-    spark.createDataFrame(rows, schema)
-  }
+      parts: TreeMap[String, MeasurementsView]): DataFrame =
+    BufferScan.frame(spark, parts)
 }

@@ -422,6 +422,9 @@ object Wal {
     */
   val MaxAutoTruncateBytes: Long = 1L << 20
 
+  /** Plain rows replay inserts per buffer call. */
+  private val ReplayRun = 8192
+
   /** Replay every segment in `directory` into the buffer; returns
     * (highest segment id, all observed ids) — the caller opens the
     * next active segment at highest+1 (reference wal.rs:276-296,
@@ -529,6 +532,16 @@ object Wal {
       rows: mutable.ArrayBuffer[WriteRequest],
       segId: Long, file: File, beginOff: Long)
     var bracket: Option[OpenBracket] = None
+    // plain rows are inserted in runs (one buffer lock hold and one
+    // day-key memo per run); the run is flushed before every seal
+    // marker (its handler drains the table) and every bracket record,
+    // so the buffer sees exactly the WAL's order
+    val pending = mutable.ArrayBuffer.empty[WriteRequest]
+    def flushPending(): Unit =
+      if (pending.nonEmpty) {
+        buffer.insertAll(pending.toSeq)
+        pending.clear()
+      }
     segments.foreach { case (id, f) =>
       observed += id
       highest = math.max(highest, id)
@@ -576,6 +589,7 @@ object Wal {
           var rec = decodeFrame()
           while (rec.isDefined) {
             val w = rec.get
+            if (w.namespace.startsWith("\u0000")) flushPending()
             if (w.namespace == graft.core.StreamBatch.Namespace) {
               val sink = w.measurement
               val bid = graft.core.StreamBatch.idOf(w)
@@ -601,7 +615,7 @@ object Wal {
                 case graft.core.StreamBatch.Commit =>
                   bracket match {
                     case Some(b) if b.sink == sink && b.bid == bid =>
-                      b.rows.foreach(buffer.insert)
+                      buffer.insertAll(b.rows.toSeq)
                       bracket = None
                       onStreamHwm(sink, bid,
                         graft.core.StreamBatch.qidOf(w))
@@ -633,7 +647,9 @@ object Wal {
               onSeal(w)
             else bracket match {
               case Some(b) => b.rows += w
-              case None => buffer.insert(w)
+              case None =>
+                pending += w
+                if (pending.size >= ReplayRun) flushPending()
             }
             lastGood = counter.count
             rec = decodeFrame()
@@ -713,6 +729,7 @@ object Wal {
         }
       }
     }
+    flushPending()
     // A bracket still open at EOF never committed: its staged rows
     // are dropped (the source re-delivers the batch — its id is above
     // every surfaced hwm) — and its records are PHYSICALLY removed.

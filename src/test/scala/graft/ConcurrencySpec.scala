@@ -347,4 +347,47 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(compared > 20 && cached.resultCacheHits.get > 0,
       "the interleaving must actually exercise queries and cache hits")
   }
+
+  test("queries racing a seal that drains the same table see every row " +
+    "exactly once; a snapshot taken before the drain still scans") {
+    val dir = Files.createTempDirectory("seal-race-wal").toFile
+    val tierDir = Files.createTempDirectory("seal-race-tier").toFile
+    val e = new LynxEngine(SparkFixture.spark, dir, 1024 * 1024,
+      Some(new ParquetTier(tierDir)))
+    val n = 50000L
+    val dayUs = 86400L * 1000000L
+    (1L to n).grouped(5000).foreach(g => e.writeBatch(g.map(i =>
+      WriteRequest("ns", "cpu", i.toString,
+        Map("host" -> TagString(s"h${i % 7}")), (i % 3) * dayUs + i))))
+    val early = e.buffer.tables("ns").get("cpu")
+    val q = "SELECT count(*) AS n, sum(CAST(value AS BIGINT)) AS s FROM cpu"
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      @volatile var sealDone = false
+      val readers = (1 to 3).map(_ => Future {
+        var after = 0
+        var checks = 0
+        while (after < 2) {
+          // fresh SQL text each time: no result-cache hits
+          val r = e.query("ns", q + " " * (checks % 50)).get.rows.head
+          assert((r.getLong(0), r.getLong(1)) == (n, n * (n + 1) / 2),
+            s"rows lost or doubled while sealing: $r")
+          if (sealDone) after += 1
+          checks += 1
+        }
+        checks
+      })
+      Thread.sleep(200)
+      e.seal("ns", "cpu")
+      sealDone = true
+      assert(Await.result(Future.sequence(readers), 180.seconds).forall(_ >= 2))
+    } finally pool.shutdown()
+    assert(e.buffer.partitions("ns", "cpu") == 0)
+    // the drain removed the chunks from the buffer, not from the
+    // snapshot that references them
+    val r = LynxEngine.toDataFrame(SparkFixture.spark, early)
+      .selectExpr("count(*)", "sum(CAST(value AS BIGINT))").head()
+    assert((r.getLong(0), r.getLong(1)) == (n, n * (n + 1) / 2))
+  }
 }

@@ -1721,4 +1721,65 @@ class EngineSpec extends AnyFunSuite {
       Some(400L), None, files).toSet == byGroup("err"),
       "numeric zones must survive a restart via the persisted index")
   }
+
+  test("seal writes exactly the drained rows, one parquet file per day " +
+    "(never more than a row-relation frame wrote)") {
+    val spark = SparkFixture.spark
+    val tierDir = Files.createTempDirectory("seal-scan-tier").toFile
+    val e = newEngine(Some(new ParquetTier(tierDir)))
+    val dayUs = 86400L * 1000000L
+    val base = 1699920000L * 1000000L
+    val r = new scala.util.Random(7)
+    // day 0 spans several chunks; days 1 and 2 are small
+    val rows = Seq(0 -> 40000, 1 -> 5, 2 -> 1000).flatMap { case (d, n) =>
+      (0 until n).map { i =>
+        val tags = Map[String, graft.core.TagValue]("host" -> TagString(s"h${r.nextInt(50)}")) ++
+          (if (r.nextInt(20) == 0) Map("rack" -> TagNumber(r.nextLong())) else Map.empty)
+        WriteRequest("ns", "cpu", r.nextInt(1000).toString, tags,
+          base + d * dayUs + r.nextInt(86400000) * 1000L + r.nextInt(1000))
+      }
+    }
+    rows.grouped(1000).foreach(e.writeBatch)
+    // what a row-relation frame (Row objects in a LocalRelation) of the
+    // same rows writes, staged into a scratch tier
+    val drained = e.buffer.tables("ns").get("cpu")
+    val schema = LynxEngine.inferSchema(drained)
+    val asRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    drained.valuesIterator.foreach { v =>
+      v.timestamps.indices.foreach { i =>
+        val ts = new java.sql.Timestamp(Math.floorDiv(v.timestamps(i), 1000L))
+        ts.setNanos((Math.floorMod(v.timestamps(i), 1000000L) * 1000L).toInt)
+        asRows.add(org.apache.spark.sql.Row.fromSeq(ts +: v.values(i) +:
+          schema.fieldNames.drop(2).toSeq.map(k => v.metadata(i).get(k).map(_.render).orNull)))
+      }
+    }
+    def withDay(df: org.apache.spark.sql.DataFrame) = df.withColumn(ParquetTier.DayCol,
+      org.apache.spark.sql.functions.date_format(
+        org.apache.spark.sql.functions.col("timestamp"), "yyyy-MM-dd"))
+    val scratch = new ParquetTier(Files.createTempDirectory("seal-rows-tier").toFile)
+    val (_, rowFiles) = scratch.stage(spark, "ns", "cpu",
+      withDay(spark.createDataFrame(asRows, schema)))
+    def perDay(files: Seq[String]): Map[String, Int] =
+      files.groupBy(f => ParquetTier.DayFromPath.findFirstMatchIn(f).get.group(1))
+        .map { case (d, fs) => d -> fs.size }
+    e.seal("ns", "cpu")
+    assert(e.buffer.partitions("ns", "cpu") == 0)
+    val sealedFiles = {
+      val t = new ParquetTier(tierDir)
+      val s = t.snapshot("ns", "cpu")
+      try s.files finally t.release(s)
+    }
+    val sealedPerDay = perDay(sealedFiles)
+    assert(sealedPerDay.values.forall(_ == 1), sealedPerDay)
+    val rowPerDay = perDay(rowFiles)
+    assert(sealedPerDay.keySet == rowPerDay.keySet)
+    sealedPerDay.foreach { case (d, n) => assert(n <= rowPerDay(d), d) }
+    // the tier now holds exactly the drained rows
+    val got = e.query("ns", "SELECT unix_micros(timestamp), value, host, rack " +
+      "FROM cpu").get.rows.map(x => (0 until 4).map(x.get)).sortBy(_.toString)
+    val want = rows.map(w => Seq[Any](w.timestamp, w.value,
+      w.metadata("host").render, w.metadata.get("rack").map(_.render).orNull))
+      .sortBy(_.toString)
+    assert(got == want)
+  }
 }

@@ -132,6 +132,28 @@ class WalSpec extends AnyFunSuite {
     assert(m.timestamps == writes.map(_.timestamp).toVector)
   }
 
+  test("replay inserts plain rows in runs but flushes each run before a " +
+    "seal marker: only the sealed table's earlier rows are drained") {
+    import graft.core.SealMarker
+    val dir = tempDir()
+    val wal = new Wal(dir, 0, 1024 * 1024)
+    def row(t: String, v: String, ts: Long) =
+      WriteRequest("ns", t, v, Map.empty, ts)
+    wal.writeAll((1 to 5).map(i => row("a", s"a$i", i.toLong)) ++
+      (1 to 3).map(i => row("b", s"b$i", i.toLong)))
+    wal.write(SealMarker("ns", "a"))
+    wal.writeAll(Seq(row("a", "a6", 6L), row("b", "b4", 4L)))
+    wal.write(SealMarker("ns", "b"))
+    wal.write(row("b", "b5", 5L))
+    wal.close()
+    val buffer = new MemBuffer
+    Wal.replay(dir, buffer)
+    def vals(t: String) = buffer.tables("ns").get(t)("1970-01-01").values
+    assert(vals("a") == Vector("a6"))
+    assert(vals("b") == Vector("b5"))
+    assert(buffer.rowCounts == Map(("ns", "a") -> 1, ("ns", "b") -> 1))
+  }
+
   test("replay across >10 segments preserves commit order " +
     "(numeric, not lexicographic, segment order)") {
     val dir = tempDir()
