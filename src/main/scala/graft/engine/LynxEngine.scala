@@ -250,7 +250,7 @@ class LynxEngine(
   def writeBatch(ws: Seq[WriteRequest]): Unit = writeLock.synchronized {
     ws.foreach(w => checkFence(w.namespace))
     validateTags(ws)
-    wal.writeAll(ws) // WAL-first invariant, batch-wide
+    wal.writeAll(ws) // WAL-first invariant (reference lynx.rs:32-33,64)
     buffer.insertAll(ws) // one lock hold + memoized day keys
     autoSealAfter(ws)
   }
@@ -283,12 +283,18 @@ class LynxEngine(
         "reserved namespace")
       requireStorableName(w.namespace, "namespace")
       requireStorableName(w.measurement, "measurement")
+      // a `timestamp`/`value` tag would collide in the inferred
+      // schema, and a `__lynx_day` tag would be overwritten at seal
       w.metadata.keys.foreach(k => require(
         k != "timestamp" && k != "value" && !k.startsWith("__lynx"),
         s"reserved tag key: $k"))
     }
 
-  /** Caller holds writeLock and has already buffered `ws`. */
+  /** Caller holds writeLock and has already buffered `ws`. A table
+    * whose RAM tail reached the threshold is sealed to the
+    * day-partitioned tier (the reference keeps everything in RAM
+    * forever, SURVEY.md §3.3).
+    */
   private def autoSealAfter(ws: Seq[WriteRequest]): Unit =
     if (tier.isDefined && maxBufferedRows != Int.MaxValue) {
       ws.groupBy(w => (w.namespace, w.measurement)).foreach {
@@ -402,34 +408,10 @@ class LynxEngine(
   def streamHighWaterMarks: Map[String, Long] =
     writeLock.synchronized(streamHwm.toMap)
 
-  def write(w: WriteRequest): Unit = writeLock.synchronized {
-    // tag keys may not shadow the fixed engine columns or the reserved
-    // `__lynx` namespace (the tier's partition column): a tag named
-    // `timestamp`/`value` would collide in the inferred schema, and a
-    // `__lynx_day` tag would be silently overwritten at seal time.
-    // The namespace NUL-prefix guard mirrors validateTags (a data row
-    // in the marker namespace would replay as a marker).
-    require(!w.namespace.startsWith("\u0000"), "reserved namespace")
-    requireStorableName(w.namespace, "namespace")
-    requireStorableName(w.measurement, "measurement")
-    checkFence(w.namespace)
-    w.metadata.keys.foreach(k => require(
-      k != "timestamp" && k != "value" && !k.startsWith("__lynx"),
-      s"reserved tag key: $k"))
-    wal.write(w) // WAL-first invariant (reference lynx.rs:32-33,64)
-    buffer.insert(w)
-    // auto-seal: once a table's RAM tail exceeds the threshold, spill
-    // it to the day-partitioned parquet tier (the 100 TB path; the
-    // reference keeps everything in RAM forever, SURVEY.md §3.3)
-    if (tier.isDefined && maxBufferedRows != Int.MaxValue) {
-      val key = (w.namespace, w.measurement)
-      val n = bufferedPerTable.getOrElse(key, 0) + 1
-      if (n >= maxBufferedRows) {
-        seal(w.namespace, w.measurement)
-        bufferedPerTable.remove(key)
-      } else bufferedPerTable.update(key, n)
-    }
-  }
+  /** Single-row ingest: the one-element batch of [[writeBatch]] — the
+    * same validation, fence check, WAL append and auto-seal.
+    */
+  def write(w: WriteRequest): Unit = writeBatch(Seq(w))
 
   /** Seal a table's buffered partitions to the parquet tier (absent
     * in the reference, which keeps all data in RAM forever —

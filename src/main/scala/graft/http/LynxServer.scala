@@ -25,9 +25,6 @@ import graft.engine.{LynxEngine, Sinks}
 object Json {
   private val mapper = new ObjectMapper
 
-  def parseWrite(body: Array[Byte]): WriteRequest =
-    parseWriteNode(mapper.readTree(body))
-
   /** Batch form: a JSON array of write objects is N writes (one WAL
     * group commit engine-side); a single object is the reference's
     * one-request shape. Any invalid element rejects the whole batch —
@@ -105,7 +102,7 @@ object Json {
     val fmt = if (n.hasNonNull("format")) n.get("format").asText()
       else "table"
     // optional time travel: read at a published tier manifest
-    // version. Same discipline as parseWrite's timestamp: a
+    // version. Same discipline as a write's timestamp: a
     // non-integral version must 422, not coerce to 0 through asLong()
     val asOf = if (!n.hasNonNull("version")) None else {
       require(n.get("version").isIntegralNumber,
@@ -238,10 +235,7 @@ object Json {
     val n = mapper.readTree(body)
     require(n.hasNonNull("namespace") && n.hasNonNull("snapshot"),
       "missing required field")
-    val snap = n.get("snapshot").asText()
-    require(snap.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
-      !snap.contains(".."),
-      "snapshot must be a bare identifier")
+    val snap = snapshotId(n)
     val table =
       if (n.hasNonNull("table")) Some(n.get("table").asText()) else None
     val version = if (!n.hasNonNull("version")) None else {
@@ -251,10 +245,27 @@ object Json {
     }
     (n.get("namespace").asText(), snap, table, version)
   }
+
+  /** {snapshot} for /admin/dropsnapshot. */
+  def parseSnapshotId(body: Array[Byte]): String = {
+    val n = mapper.readTree(body)
+    require(n.hasNonNull("snapshot"), "missing required field")
+    snapshotId(n)
+  }
+
+  private def snapshotId(n: JsonNode): String = {
+    val snap = n.get("snapshot").asText()
+    require(snap.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
+      !snap.contains(".."),
+      "snapshot must be a bare identifier")
+    snap
+  }
 }
 
 final class LynxServer(engine: LynxEngine, host: String, port: Int,
     exchangeDir: Option[File] = None) {
+  import LynxServer.{errorJson, readBody, respond}
+
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
   // without an executor every request serializes on the dispatch
   // thread; the reference serves each request on its own tokio task
@@ -264,12 +275,56 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
     math.max(8, Runtime.getRuntime.availableProcessors()))
   server.setExecutor(pool)
 
-  private def respond(ex: HttpExchange, code: Int, body: String = ""): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
-    if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
-    ex.close()
-  }
+  /** A handler's reply: status and (possibly empty) body. */
+  private type Reply = (Int, String)
+  private val ok: Reply = (200, "")
+  private val notFound: Reply = (404, "")
+
+  /** Register one POST route. Any other method gets 405. The body is
+    * read once through [[LynxServer.readBody]] (413 over the cap). A
+    * `parse` failure gets an empty 422: the reference's axum Json
+    * extractor rejects malformed bodies before the handler. An
+    * exception out of `handle` becomes:
+    *  - 422 + Retry-After for a migration-fenced namespace (transient
+    *    for a racing writer: a retry after the router flip lands on
+    *    the new owner, so it must differ from a permanent 4xx);
+    *  - 422 {"error"} for an IllegalArgumentException when
+    *    `clientErrors` (the message carries the bound the caller
+    *    broke);
+    *  - otherwise 500 (reference main.rs:84-87, bad SQL included),
+    *    with an {"error"} body when `errorBody`.
+    */
+  private def route[A](path: String, parse: Array[Byte] => A,
+      clientErrors: Boolean = false, errorBody: Boolean = false)(
+      handle: A => Reply): Unit =
+    server.createContext(path, (ex: HttpExchange) =>
+      if (ex.getRequestMethod != "POST") respond(ex, 405)
+      else readBody(ex).foreach { body =>
+        val parsed =
+          try Right(parse(body))
+          catch { case e: Exception => Left(e) }
+        val (code, out) = parsed match {
+          case Left(e) =>
+            System.err.println(e)
+            (422, "")
+          case Right(a) =>
+            try handle(a)
+            catch {
+              case e: LynxEngine.NamespaceFencedException =>
+                ex.getResponseHeaders.set("Retry-After", "2")
+                (422, s"""{"error":${
+                  Sinks.jsonString(e.getMessage)},"retryable":true}""")
+              case e: IllegalArgumentException if clientErrors =>
+                (422, errorJson(e.getMessage))
+              case e: Exception =>
+                System.err.println(e)
+                (500,
+                  if (errorBody) errorJson(String.valueOf(e.getMessage))
+                  else "")
+            }
+        }
+        respond(ex, code, out)
+      })
 
   server.createContext("/health", (ex: HttpExchange) => respond(ex, 200))
 
@@ -325,168 +380,54 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
     }
   })
 
-  // malformed request bodies → 422 (the reference's axum Json
-  // extractor rejects them pre-handler with a 4xx); engine-side
-  // failures, including bad SQL, → 500 (reference main.rs:84-87)
-  server.createContext("/api/v1/write", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseWriteBatch(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right(Seq(w)) =>
-          try {
-            engine.write(w)
-            respond(ex, 200)
-          } catch {
-            case e: LynxEngine.NamespaceFencedException =>
-              fencedResponse(ex, e)
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-        case Right(ws) =>
-          try {
-            engine.writeBatch(ws)
-            respond(ex, 200)
-          } catch {
-            case e: LynxEngine.NamespaceFencedException =>
-              fencedResponse(ex, e)
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
-
-  /** Migration-fenced namespace: 422 + Retry-After — transient for a
-    * racing writer (a retry after the router flip lands on the new
-    * owner), so it must be distinguishable from a permanent 4xx.
-    */
-  private def fencedResponse(ex: HttpExchange,
-      e: LynxEngine.NamespaceFencedException): Unit = {
-    ex.getResponseHeaders.set("Retry-After", "2")
-    respond(ex, 422, s"""{"error":${
-      Sinks.jsonString(e.getMessage)},"retryable":true}""")
+  // a single object and an array both take the batch lane: one WAL
+  // append and flush per body, all rows or none
+  route("/api/v1/write", Json.parseWriteBatch) { ws =>
+    engine.writeBatch(ws)
+    ok
   }
 
-  server.createContext("/api/v1/query", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseQuery(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, sql, fmt, asOf)) =>
-          try {
-            engine.query(ns, sql, asOf) match {
-              case Some(result) =>
-                respond(ex, 200, fmt match {
-                  case "json" => Sinks.toJson(result)
-                  case "csv" => Sinks.toCsv(result)
-                  case _ => Sinks.toTable(result)
-                })
-              case None => respond(ex, 404)
-            }
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
+  route("/api/v1/query", Json.parseQuery) { case (ns, sql, fmt, asOf) =>
+    engine.query(ns, sql, asOf).fold(notFound) { result =>
+      (200, fmt match {
+        case "json" => Sinks.toJson(result)
+        case "csv" => Sinks.toCsv(result)
+        case _ => Sinks.toTable(result)
+      })
     }
-  })
+  }
 
   // admin: flush the RAM tail to the tier and truncate the WAL
-  // (no-op engine-side without a configured tier)
-  server.createContext("/api/v1/admin/checkpoint", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else try {
-      engine.checkpoint()
-      respond(ex, 200)
-    } catch {
-      case e: Exception =>
-        System.err.println(e)
-        respond(ex, 500)
-    }
-  })
+  // (no-op engine-side without a configured tier); takes no body
+  route("/api/v1/admin/checkpoint", _ => ()) { _ =>
+    engine.checkpoint()
+    ok
+  }
 
   // admin: rewrite a table's tier files (one per day, optionally
   // clustered on tag columns for row-group pruning)
-  server.createContext("/api/v1/admin/compact", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseCompact(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, clusterBy)) =>
-          try {
-            engine.compact(ns, table, clusterBy)
-            respond(ex, 200)
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
+  route("/api/v1/admin/compact", Json.parseCompact) {
+    case (ns, table, clusterBy) =>
+      engine.compact(ns, table, clusterBy)
+      ok
+  }
 
   // maintained rollup: count + exact-decimal sum per group over the
   // tiered table, served incrementally (only unseen segments are
   // aggregated — see graft.engine.RollupStore). 404 when the engine
-  // has no tier (nothing immutable to maintain against).
-  server.createContext("/api/v1/rollup", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseRollup(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, group, value)) =>
-          engine.rollups match {
-            case None => respond(ex, 404)
-            case Some(store) =>
-              try {
-                val rows = store.rollup(ns, table, group, value)
-                  .map { case (g, c, s) =>
-                    // group values are arbitrary tag strings —
-                    // control characters included — so route through
-                    // the sink escaper, not a hand-rolled replace()
-                    val gj = g.map(Sinks.jsonString).getOrElse("null")
-                    s"""{"group":$gj,"count":$c,"sum":$s}"""
-                  }.mkString("[", ",", "]")
-                respond(ex, 200, rows)
-              } catch {
-                // cardinality-bound rejections carry the limit in the
-                // message — surface it as a client error, not a bare
-                // 500, so the caller learns the contract
-                case e: IllegalArgumentException =>
-                  respond(ex, 422, s"""{"error":${
-                    Sinks.jsonString(e.getMessage)}}""")
-                case e: Exception =>
-                  System.err.println(e)
-                  respond(ex, 500)
-              }
-          }
+  // has no tier (nothing immutable to maintain against). Cardinality-
+  // bound rejections are client errors carrying the limit.
+  route("/api/v1/rollup", Json.parseRollup, clientErrors = true) {
+    case (ns, table, group, value) =>
+      engine.rollups.fold(notFound) { store =>
+        (200, store.rollup(ns, table, group, value).map { case (g, c, s) =>
+          // group values are arbitrary tag strings — control
+          // characters included — so route through the sink escaper
+          val gj = g.map(Sinks.jsonString).getOrElse("null")
+          s"""{"group":$gj,"count":$c,"sum":$s}"""
+        }.mkString("[", ",", "]"))
       }
-    }
-  })
+  }
 
   // ANN top-k over a built IVF index (see graft.engine.AnnStore):
   // POST {index, vector, k?, nprobe?, labels?} →
@@ -495,264 +436,124 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
   // Builds are engine-side only — an HTTP-triggered build would read
   // an arbitrary host parquet path on behalf of an untrusted caller
   // (the runSQLOnFiles=false rationale). 404 when the engine has no
-  // tier or the index was never built.
-  server.createContext("/api/v1/ann", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseAnn(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((name, vec, k, nprobe, labels)) =>
-          engine.ann match {
-            case None => respond(ex, 404)
-            case Some(store) =>
-              try store.query(name, vec, k, nprobe, labels) match {
-                case None => respond(ex, 404)
-                case Some(hits) =>
-                  val body = hits.map { case (id, cos) =>
-                    s"""{"vec_id":$id,"cos":$cos}"""
-                  }.mkString("[", ",", "]")
-                  respond(ex, 200, body)
-              } catch {
-                // dimension/bounds violations carry the contract in
-                // the message — client error, not a bare 500
-                case e: IllegalArgumentException =>
-                  respond(ex, 422, s"""{"error":${
-                    Sinks.jsonString(e.getMessage)}}""")
-                case e: Exception =>
-                  System.err.println(e)
-                  respond(ex, 500)
-              }
-          }
-      }
-    }
-  })
+  // tier or the index was never built; dimension/bounds violations
+  // are client errors.
+  route("/api/v1/ann", Json.parseAnn, clientErrors = true) {
+    case (name, vec, k, nprobe, labels) =>
+      engine.ann.flatMap(_.query(name, vec, k, nprobe, labels))
+        .fold(notFound) { hits =>
+          (200, hits.map { case (id, cos) =>
+            s"""{"vec_id":$id,"cos":$cos}"""
+          }.mkString("[", ",", "]"))
+        }
+  }
 
   // per-file value-bloom index maintenance (see graft.engine.
   // BloomStore): POST {namespace, table, column} builds/refreshes the
   // bloom index for the table's current manifest; subsequent queries
   // with `column = 'literal'` predicates skip files whose blooms
   // exclude the literal. Returns the newly indexed file count and the
-  // table's indexed columns. 404 when the engine has no tier.
-  server.createContext("/api/v1/bloom", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseBloom(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, column)) =>
-          engine.valueBlooms match {
-            case None => respond(ex, 404)
-            case Some(store) =>
-              try {
-                val n = store.index(ns, table, column)
-                val cols = store.indexedColumns(ns, table)
-                  .toSeq.sorted.map(Sinks.jsonString).mkString(",")
-                respond(ex, 200,
-                  s"""{"indexed":$n,"columns":[$cols]}""")
-              } catch {
-                // type/identifier rejections carry the contract in
-                // the message — client error, not a bare 500
-                case e: IllegalArgumentException =>
-                  respond(ex, 422, s"""{"error":${
-                    Sinks.jsonString(e.getMessage)}}""")
-                case e: Exception =>
-                  System.err.println(e)
-                  respond(ex, 500)
-              }
-          }
+  // table's indexed columns. 404 when the engine has no tier;
+  // type/identifier rejections are client errors.
+  route("/api/v1/bloom", Json.parseBloom, clientErrors = true) {
+    case (ns, table, column) =>
+      engine.valueBlooms.fold(notFound) { store =>
+        val n = store.index(ns, table, column)
+        val cols = store.indexedColumns(ns, table)
+          .toSeq.sorted.map(Sinks.jsonString).mkString(",")
+        (200, s"""{"indexed":$n,"columns":[$cols]}""")
       }
-    }
-  })
+  }
 
   // admin: list a table's published manifest versions (oldest first)
   // with file counts — how a client discovers the `version` values the
   // query endpoint's time-travel parameter accepts
-  server.createContext("/api/v1/admin/versions", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseCompact(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, _)) =>
-          try {
-            val vs = engine.tierVersions(ns, table)
-              .map { case (v, n) => s"""{"version":$v,"files":$n}""" }
-              .mkString("[", ",", "]")
-            respond(ex, 200, vs)
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
+  route("/api/v1/admin/versions", Json.parseCompact) {
+    case (ns, table, _) =>
+      (200, engine.tierVersions(ns, table)
+        .map { case (v, n) => s"""{"version":$v,"files":$n}""" }
+        .mkString("[", ",", "]"))
+  }
 
   // admin: retention — age out day partitions older than before_day
   // (exclusive); reports how many data files the manifest dropped
-  server.createContext("/api/v1/admin/expire", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val parsed =
-        try Right(Json.parseExpire(ex.getRequestBody.readAllBytes()))
-        catch { case e: Exception => Left(e) }
-      parsed match {
-        case Left(e) =>
-          System.err.println(e)
-          respond(ex, 422)
-        case Right((ns, table, day)) =>
-          try {
-            val dropped = engine.expire(ns, table, day)
-            respond(ex, 200, s"""{"dropped_files":$dropped}""")
-          } catch {
-            case e: Exception =>
-              System.err.println(e)
-              respond(ex, 500)
-          }
-      }
-    }
-  })
+  route("/api/v1/admin/expire", Json.parseExpire) {
+    case (ns, table, day) =>
+      (200, s"""{"dropped_files":${engine.expire(ns, table, day)}}""")
+  }
 
   // admin: write-fence a namespace (the migration drain barrier) /
   // lift it. Fencing is idempotent and durable across restarts.
-  server.createContext("/api/v1/admin/fence", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else handleNamespaceToggle(ex, engine.fence)
-  })
-  server.createContext("/api/v1/admin/unfence", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else handleNamespaceToggle(ex, engine.unfence)
-  })
-
-  private def handleNamespaceToggle(ex: HttpExchange,
-      f: String => Unit): Unit = {
-    val parsed =
-      try Right(Json.parseNamespace(ex.getRequestBody.readAllBytes()))
-      catch { case e: Exception => Left(e) }
-    parsed match {
-      case Left(e) =>
-        System.err.println(e)
-        respond(ex, 422)
-      case Right(ns) =>
-        try { f(ns); respond(ex, 200) }
-        catch {
-          case e: Exception =>
-            System.err.println(e)
-            respond(ex, 500)
-        }
-    }
+  route("/api/v1/admin/fence", Json.parseNamespace) { ns =>
+    engine.fence(ns)
+    ok
+  }
+  route("/api/v1/admin/unfence", Json.parseNamespace) { ns =>
+    engine.unfence(ns)
+    ok
   }
 
   // admin: snapshot export/import through the EXCHANGE DIR — the
   // shared-storage handoff area of backup/restore and namespace
-  // migration. Only registered when the operator configured one
+  // migration. Only served when the operator configured one
   // (LYNX_EXCHANGE_DIR): the snapshot id is identifier-restricted
   // and resolves strictly under that root, so the HTTP plane can
   // never read or write an arbitrary host path (the ANN-build /
-  // runSQLOnFiles security stance). 404 without the config.
-  private def snapshotEndpoint(ex: HttpExchange)(
+  // runSQLOnFiles security stance). 404 without the config, before
+  // the body is parsed.
+  private def snapshotRoute(path: String)(
       handle: (String, File, Option[String], Option[Long]) => String)
       : Unit =
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else exchangeDir match {
-      case None => respond(ex, 404)
-      case Some(root) =>
-        val parsed =
-          try Right(Json.parseSnapshot(ex.getRequestBody.readAllBytes()))
-          catch { case e: Exception => Left(e) }
-        parsed match {
-          case Left(e) =>
-            System.err.println(e)
-            respond(ex, 422)
-          case Right((ns, snap, table, version)) =>
-            try respond(ex, 200,
-              handle(ns, new File(root, snap), table, version))
-            catch {
-              case e: IllegalArgumentException =>
-                respond(ex, 422, s"""{"error":${
-                  Sinks.jsonString(e.getMessage)}}""")
-              case e: Exception =>
-                System.err.println(e)
-                respond(ex, 500, s"""{"error":${
-                  Sinks.jsonString(String.valueOf(e.getMessage))}}""")
-            }
-        }
+    route(path,
+      body => exchangeDir.map(root => (root, Json.parseSnapshot(body))),
+      clientErrors = true, errorBody = true) {
+      case None => notFound
+      case Some((root, (ns, snap, table, version))) =>
+        (200, handle(ns, new File(root, snap), table, version))
     }
 
-  server.createContext("/api/v1/admin/export", (ex: HttpExchange) =>
-    snapshotEndpoint(ex) { (ns, dest, table, version) =>
-      table match {
-        case Some(t) =>
-          val n = engine.exportSnapshot(ns, t, version, dest)
-          s"""[{"table":${Sinks.jsonString(t)},"files":$n}]"""
-        case None =>
-          engine.exportNamespace(ns, dest).map { case (t, n) =>
-            s"""{"table":${Sinks.jsonString(t)},"files":$n}"""
-          }.mkString("[", ",", "]")
-      }
-    })
+  snapshotRoute("/api/v1/admin/export") { (ns, dest, table, version) =>
+    table match {
+      case Some(t) =>
+        val n = engine.exportSnapshot(ns, t, version, dest)
+        s"""[{"table":${Sinks.jsonString(t)},"files":$n}]"""
+      case None =>
+        engine.exportNamespace(ns, dest).map { case (t, n) =>
+          s"""{"table":${Sinks.jsonString(t)},"files":$n}"""
+        }.mkString("[", ",", "]")
+    }
+  }
 
-  server.createContext("/api/v1/admin/import", (ex: HttpExchange) =>
-    snapshotEndpoint(ex) { (ns, src, table, _) =>
-      table match {
-        case Some(t) =>
-          val v = engine.importSnapshot(ns, t, src)
-          s"""[{"table":${Sinks.jsonString(t)},"version":$v}]"""
-        case None =>
-          engine.importNamespace(ns, src).map { case (t, v) =>
-            s"""{"table":${Sinks.jsonString(t)},"version":$v}"""
-          }.mkString("[", ",", "]")
-      }
-    })
+  snapshotRoute("/api/v1/admin/import") { (ns, src, table, _) =>
+    table match {
+      case Some(t) =>
+        val v = engine.importSnapshot(ns, t, src)
+        s"""[{"table":${Sinks.jsonString(t)},"version":$v}]"""
+      case None =>
+        engine.importNamespace(ns, src).map { case (t, v) =>
+          s"""{"table":${Sinks.jsonString(t)},"version":$v}"""
+        }.mkString("[", ",", "]")
+    }
+  }
 
   // admin: reclaim an exchange-dir snapshot (the migration driver
   // calls this after a successful flip or a failed attempt — without
   // it every migration leaves a full namespace copy on the shared
   // storage forever). Same identifier-under-the-exchange-root
   // discipline as export/import; 404 without the config.
-  server.createContext("/api/v1/admin/dropsnapshot", (ex: HttpExchange) =>
-    if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else exchangeDir match {
-      case None => respond(ex, 404)
-      case Some(root) =>
-        val parsed = try {
-          val n = new ObjectMapper()
-            .readTree(ex.getRequestBody.readAllBytes())
-          require(n.hasNonNull("snapshot"), "missing required field")
-          val snap = n.get("snapshot").asText()
-          require(snap.matches("[A-Za-z0-9][A-Za-z0-9._-]*") &&
-            !snap.contains(".."), "snapshot must be a bare identifier")
-          Right(snap)
-        } catch { case e: Exception => Left(e) }
-        parsed match {
-          case Left(e) =>
-            System.err.println(e)
-            respond(ex, 422)
-          case Right(snap) =>
-            def rm(f: File): Unit = {
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-              f.delete()
-              ()
-            }
-            val dir = new File(root, snap)
-            val existed = dir.exists()
-            if (existed) rm(dir)
-            respond(ex, 200, s"""{"dropped":$existed}""")
-        }
-    })
+  route("/api/v1/admin/dropsnapshot",
+    body => exchangeDir.map(new File(_, Json.parseSnapshotId(body)))) {
+    case None => notFound
+    case Some(dir) =>
+      def rm(f: File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+        f.delete()
+        ()
+      }
+      val existed = dir.exists()
+      if (existed) rm(dir)
+      (200, s"""{"dropped":$existed}""")
+  }
 
   def start(): Unit = server.start()
   def stop(): Unit = {
@@ -760,6 +561,44 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
     pool.shutdown()
   }
   def boundPort: Int = server.getAddress.getPort
+}
+
+object LynxServer {
+  /** Largest request body any POST route reads (64 MiB), on the
+    * engine and the router alike. A bigger body gets 413 before it is
+    * buffered: a Content-Length over the cap is refused unread, and a
+    * body without one is read to at most one byte past the cap. The
+    * largest bodies the data plane carries are write batches of a few
+    * thousand rows, well under a MiB.
+    */
+  val MaxBodyBytes: Int = 64 << 20
+
+  /** The request body, or None once a 413 has been sent for a body
+    * over [[MaxBodyBytes]].
+    */
+  private[http] def readBody(ex: HttpExchange): Option[Array[Byte]] = {
+    val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+      .flatMap(_.trim.toLongOption)
+    val body =
+      if (declared.exists(_ > MaxBodyBytes)) None
+      else Some(ex.getRequestBody.readNBytes(MaxBodyBytes + 1))
+        .filter(_.length <= MaxBodyBytes)
+    if (body.isEmpty)
+      respond(ex, 413,
+        errorJson(s"request body exceeds $MaxBodyBytes bytes"))
+    body
+  }
+
+  private[http] def respond(ex: HttpExchange, code: Int,
+      body: String = ""): Unit = {
+    val bytes = body.getBytes(UTF_8)
+    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
+    if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
+    ex.close()
+  }
+
+  private[http] def errorJson(msg: String): String =
+    s"""{"error":${Sinks.jsonString(msg)}}"""
 }
 
 /** Entry point; env config mirrors the reference (main.rs:19-29):

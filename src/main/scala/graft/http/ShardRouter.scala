@@ -38,6 +38,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *    lists to enumerate exactly which namespaces a reshard moves).
   *  - /health aggregates per-shard health (503 while any backend is
   *    down); /metrics reports the shard table + health booleans.
+  *  - every POST body is read under the engine's cap
+  *    ([[LynxServer.MaxBodyBytes]]; 413 over it).
   *
   * Failure semantics: a request for a namespace whose owner is down
   * fails 502 — the owner holds the namespace's WAL and tier, so
@@ -60,6 +62,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 final class ShardRouter(host: String, port: Int,
     shards: Seq[(String, String)],
     stateFile: Option[java.io.File] = None) {
+  import LynxServer.{readBody, respond}
+
   require(shards.nonEmpty, "router needs at least one shard")
   require(shards.map(_._1).distinct.size == shards.size,
     "shard names must be unique")
@@ -138,14 +142,6 @@ final class ShardRouter(host: String, port: Int,
 
   /** Current migration overrides (observability + specs). */
   def ownerOverrides: Map[String, String] = overrides.toMap
-
-  private def respond(ex: HttpExchange, code: Int,
-      body: String = ""): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.sendResponseHeaders(code, if (bytes.isEmpty) -1 else bytes.length)
-    if (bytes.nonEmpty) ex.getResponseBody.write(bytes)
-    ex.close()
-  }
 
   /** Forward `body` as a POST to `baseUrl + path`; returns
     * (status, responseBody, relayedResponseHeaders). Connection
@@ -232,8 +228,7 @@ final class ShardRouter(host: String, port: Int,
     */
   private def routeByNamespace(path: String)(ex: HttpExchange): Unit =
     if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val body = ex.getRequestBody.readAllBytes()
+    else readBody(ex).foreach { body =>
       val routed =
         try Right {
           val nss = namespacesOf(body)
@@ -270,8 +265,7 @@ final class ShardRouter(host: String, port: Int,
   // a namespace cannot alias its placement)
   server.createContext("/api/v1/ann", (ex: HttpExchange) => {
     if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val body = ex.getRequestBody.readAllBytes()
+    else readBody(ex).foreach { body =>
       val routed =
         try {
           val n = mapper.readTree(body)
@@ -298,8 +292,7 @@ final class ShardRouter(host: String, port: Int,
   // checkpoint is engine-wide, not namespace-scoped: broadcast
   server.createContext("/api/v1/admin/checkpoint", (ex: HttpExchange) => {
     if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
-      val body = ex.getRequestBody.readAllBytes()
+    else readBody(ex).foreach { body =>
       val results = shards.map { case (name, url) =>
         name -> forward(url, "/api/v1/admin/checkpoint", body)
       }
@@ -317,10 +310,10 @@ final class ShardRouter(host: String, port: Int,
   // the ops call behind the documented add-a-shard procedure
   server.createContext("/api/v1/shard", (ex: HttpExchange) => {
     if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
+    else readBody(ex).foreach { body =>
       val parsed =
         try {
-          val n = mapper.readTree(ex.getRequestBody.readAllBytes())
+          val n = mapper.readTree(body)
           val k =
             if (n.hasNonNull("key")) n.get("key").asText()
             else if (n.hasNonNull("namespace")) n.get("namespace").asText()
@@ -364,10 +357,10 @@ final class ShardRouter(host: String, port: Int,
   // Requires both engines to share LYNX_EXCHANGE_DIR storage.
   server.createContext("/api/v1/admin/migrate", (ex: HttpExchange) => {
     if (ex.getRequestMethod != "POST") respond(ex, 405)
-    else {
+    else readBody(ex).foreach { body =>
       val parsed =
         try {
-          val n = mapper.readTree(ex.getRequestBody.readAllBytes())
+          val n = mapper.readTree(body)
           require(n.hasNonNull("namespace") && n.hasNonNull("to"),
             "missing required field")
           Right((n.get("namespace").asText(), n.get("to").asText()))

@@ -36,7 +36,10 @@ object WalCodec {
     */
   val Header2: Array[Byte] = "LYNX2".getBytes(UTF_8)
 
-  /** A LYNX2 record frame: the LYNX1 payload plus its CRC32. */
+  /** A LYNX2 record frame: the LYNX1 payload plus its CRC32. The
+    * reference encoding for tests; [[Wal]] writes the same bytes
+    * from a reusable buffer.
+    */
   def encodeV2(w: WriteRequest): Array[Byte] = {
     val payload = encode(w)
     val crc = new java.util.zip.CRC32
@@ -56,8 +59,8 @@ object WalCodec {
     bos.toByteArray
   }
 
-  /** Encode the LYNX1 payload into `out` (no CRC) — the reusable-
-    * buffer inner loop of the batch write lane.
+  /** Encode the LYNX1 payload into `out` (no CRC) — the inner loop
+    * of every [[Wal]] append.
     */
   def encodeTo(w: WriteRequest, out: DataOutputStream): Unit = {
     def bytes(s: String): Unit = {
@@ -158,16 +161,8 @@ final class Segment(val id: Long, directory: File) {
   private var _size: Long = WalCodec.Header2.length.toLong
 
   def size: Long = _size
-  def write(data: Array[Byte], flushNow: Boolean): Unit = {
-    out.write(data)
-    if (flushNow) out.flush()
-    _size += data.length
-  }
-  /** Range write for the batch lane's reusable frame buffer. */
-  def write(data: Array[Byte], off: Int, len: Int,
-      flushNow: Boolean): Unit = {
+  def write(data: Array[Byte], off: Int, len: Int): Unit = {
     out.write(data, off, len)
-    if (flushNow) out.flush()
     _size += len
   }
   def flush(): Unit = out.flush()
@@ -225,32 +220,35 @@ final class Wal(directory: File, startSegmentId: Long,
   def activeSegmentId: Long = active.id
   def activeSegmentSize: Long = active.size
 
-  def write(w: WriteRequest): Unit = synchronized {
-    if (active.size > maxSegmentSize) rotate()
-    active.write(WalCodec.encodeV2(w),
-      flushNow = groupCommitMillis <= 0)
-    if (groupCommitMillis <= 0 && fsyncOnFlush)
-      active.sync() // per-record fsync mode
-    if (groupCommitMillis > 0 &&
-        System.nanoTime() - lastFlushNanos >= groupCommitMillis * 1000000L)
-      flush() // reentrant: already holds the lock
-  }
+  /** Append one record: the one-element batch of [[writeAll]], with
+    * the same framing, flush, fsync and group-commit deadline.
+    */
+  def write(w: WriteRequest): Unit = writeAll(Seq(w))
 
   /** Append a whole batch with ONE flush (and one fsync when
     * configured) at the end — the group-commit rung exercised
     * explicitly: N records cost the same durability round-trip as
     * one. Rotation is still checked per record so segment bounds
-    * hold. Under timer-driven group commit the batch only buffers,
-    * exactly like write().
+    * hold. Under timer-driven group commit the batch only buffers.
     */
-  // Reusable frame scratch for the batch lane: encodeV2 allocates a
-  // fresh byte[] per record (ByteArrayOutputStream + copy + CRC
-  // copy); at batch rates that allocation churn is measurable, so
-  // writeAll encodes every record into ONE growing buffer and
-  // appends payload + CRC straight into the segment stream —
-  // byte-identical frames on disk (WalSpec pins the sizes), zero
-  // per-record allocation once the buffer has grown. Guarded by the
-  // Wal lock like everything else here.
+  def writeAll(ws: Seq[WriteRequest]): Unit = synchronized {
+    ws.foreach { w =>
+      if (active.size > maxSegmentSize) rotate()
+      appendFrame(w)
+    }
+    if (groupCommitMillis <= 0) {
+      if (fsyncOnFlush) active.sync() else active.flush()
+    } else if (System.nanoTime() - lastFlushNanos >=
+        groupCommitMillis * 1000000L) {
+      flush()
+    }
+  }
+
+  // Reusable frame scratch: every record is encoded into ONE growing
+  // buffer and its payload + CRC appended straight into the segment
+  // stream — the frames WalCodec.encodeV2 builds, byte for byte
+  // (WalSpec pins the sizes), with no per-record allocation once the
+  // buffer has grown. Guarded by the Wal lock like everything else.
   private final class Scratch extends java.io.ByteArrayOutputStream(512) {
     def buffer: Array[Byte] = buf
     def length: Int = count
@@ -260,27 +258,19 @@ final class Wal(directory: File, startSegmentId: Long,
   private val scratchCrc = new java.util.zip.CRC32
   private val crcBytes = new Array[Byte](4)
 
-  def writeAll(ws: Seq[WriteRequest]): Unit = synchronized {
-    ws.foreach { w =>
-      if (active.size > maxSegmentSize) rotate()
-      scratch.reset()
-      WalCodec.encodeTo(w, scratchOut)
-      scratchCrc.reset()
-      scratchCrc.update(scratch.buffer, 0, scratch.length)
-      val v = scratchCrc.getValue
-      crcBytes(0) = ((v >>> 24) & 0xff).toByte
-      crcBytes(1) = ((v >>> 16) & 0xff).toByte
-      crcBytes(2) = ((v >>> 8) & 0xff).toByte
-      crcBytes(3) = (v & 0xff).toByte
-      active.write(scratch.buffer, 0, scratch.length, flushNow = false)
-      active.write(crcBytes, 0, 4, flushNow = false)
-    }
-    if (groupCommitMillis <= 0) {
-      if (fsyncOnFlush) active.sync() else active.flush()
-    } else if (System.nanoTime() - lastFlushNanos >=
-        groupCommitMillis * 1000000L) {
-      flush()
-    }
+  /** Caller holds the Wal lock. Buffers one LYNX2 frame; no flush. */
+  private def appendFrame(w: WriteRequest): Unit = {
+    scratch.reset()
+    WalCodec.encodeTo(w, scratchOut)
+    scratchCrc.reset()
+    scratchCrc.update(scratch.buffer, 0, scratch.length)
+    val v = scratchCrc.getValue
+    crcBytes(0) = ((v >>> 24) & 0xff).toByte
+    crcBytes(1) = ((v >>> 16) & 0xff).toByte
+    crcBytes(2) = ((v >>> 8) & 0xff).toByte
+    crcBytes(3) = (v & 0xff).toByte
+    active.write(scratch.buffer, 0, scratch.length)
+    active.write(crcBytes, 0, 4)
   }
 
   /** Force buffered records to the OS now (and to the device when
@@ -318,8 +308,7 @@ final class Wal(directory: File, startSegmentId: Long,
     synchronized {
       rotate()
       if (carryOver.nonEmpty) {
-        carryOver.foreach(w =>
-          active.write(WalCodec.encodeV2(w), flushNow = false))
+        carryOver.foreach(appendFrame)
         if (fsyncOnFlush) active.sync() else active.flush()
       }
       // Delete every segment older than the fresh active one

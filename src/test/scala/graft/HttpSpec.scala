@@ -389,7 +389,7 @@ class HttpSpec extends AnyFunSuite {
         """ cpu","format":"json","version":7}""")
       assert(missing.statusCode() == 500)
       // non-integral / out-of-range versions → 422, never a silent
-      // asLong() coercion to 0 (the parseWrite timestamp discipline)
+      // asLong() coercion to 0 (the write timestamp discipline)
       for (bad <- Seq(""""abc"""", "1.7", "99999999999999999999"))
         assert(q(s"""{"namespace":"ns","query":"SELECT value FROM""" +
           s""" cpu","format":"json","version":$bad}""").statusCode()
@@ -453,6 +453,113 @@ class HttpSpec extends AnyFunSuite {
           URI.create(s"http://127.0.0.1:$port/api/v1/query")).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       assert(rGet.statusCode() == 405)
+    }
+  }
+
+  test("every POST route answers a GET with 405 and an unparseable " +
+    "body with 422; exchange routes 404 without an exchange dir") {
+    def get(port: Int, path: String): HttpResponse[String] = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+        .GET().build(), HttpResponse.BodyHandlers.ofString())
+    // (route, status of an unparseable body with a tier and an
+    // exchange dir, the same without either); checkpoint reads no body
+    val routes = Seq(
+      ("/api/v1/write", 422, 422),
+      ("/api/v1/query", 422, 422),
+      ("/api/v1/admin/checkpoint", 200, 200),
+      ("/api/v1/admin/compact", 422, 422),
+      ("/api/v1/rollup", 422, 422),
+      ("/api/v1/ann", 422, 422),
+      ("/api/v1/bloom", 422, 422),
+      ("/api/v1/admin/versions", 422, 422),
+      ("/api/v1/admin/expire", 422, 422),
+      ("/api/v1/admin/fence", 422, 422),
+      ("/api/v1/admin/unfence", 422, 422),
+      ("/api/v1/admin/export", 422, 404),
+      ("/api/v1/admin/import", 422, 404),
+      ("/api/v1/admin/dropsnapshot", 422, 404))
+    val dir = Files.createTempDirectory("http-routes").toFile
+    val tierDir = Files.createTempDirectory("http-routes-tier").toFile
+    val exchange = Files.createTempDirectory("http-routes-x").toFile
+    val full = new LynxServer(
+      new LynxEngine(SparkFixture.spark, dir, 1024 * 1024,
+        Some(new graft.tier.ParquetTier(tierDir))),
+      "127.0.0.1", 0, exchangeDir = Some(exchange))
+    full.start()
+    try withServer { bare =>
+      for ((path, withDirs, without) <- routes;
+           (port, want) <- Seq((full.boundPort, withDirs), (bare, without))) {
+        val g = get(port, path)
+        assert(g.statusCode() == 405 && g.body() == "", s"GET $path")
+        val r = post(port, path, "{not json")
+        assert(r.statusCode() == want && r.body() == "",
+          s"$path: ${r.statusCode()} ${r.body()}")
+      }
+    } finally full.stop()
+  }
+
+  test("a fenced namespace refuses single-object and one-element-array " +
+    "writes with 422 + Retry-After") {
+    val dir = Files.createTempDirectory("http-fence").toFile
+    val engine = new LynxEngine(SparkFixture.spark, dir, 1024 * 1024)
+    val server = new LynxServer(engine, "127.0.0.1", 0)
+    server.start()
+    try {
+      val port = server.boundPort
+      assert(post(port, "/api/v1/admin/fence", """{"namespace":"f"}""")
+        .statusCode() == 200)
+      val row = """{"namespace":"f","measurement":"cpu","value":"1",""" +
+        """"timestamp":1}"""
+      for (body <- Seq(row, s"[$row]")) {
+        val r = post(port, "/api/v1/write", body)
+        assert(r.statusCode() == 422 &&
+          r.headers().firstValue("Retry-After").orElse("") == "2" &&
+          r.body().contains("\"retryable\":true"),
+          s"$body: ${r.statusCode()} ${r.body()}")
+      }
+      assert(engine.buffer.isEmpty)
+    } finally server.stop()
+  }
+
+  test("a body over the cap gets 413 with and without a Content-Length; " +
+    "a normal write on the same server still returns 200") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    withServer { port =>
+      // raw HTTP/1.1 so the test controls the framing: the status line
+      // of the reply to `head` followed by whatever `body` writes
+      def status(head: String)(body: java.io.OutputStream => Unit): Int = {
+        val sock = new java.net.Socket("127.0.0.1", port)
+        sock.setSoTimeout(30000) // a server waiting for the body fails
+        try {
+          val out = new java.io.BufferedOutputStream(
+            sock.getOutputStream, 1 << 16)
+          out.write(("POST /api/v1/write HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+            head + "\r\n").getBytes(ISO_8859_1))
+          body(out)
+          out.flush()
+          new java.io.BufferedReader(new java.io.InputStreamReader(
+            sock.getInputStream, ISO_8859_1)).readLine().split(" ")(1).toInt
+        } finally sock.close()
+      }
+      val over = LynxServer.MaxBodyBytes + 1
+      // a declared length over the cap is refused before any byte
+      assert(status(s"Content-Length: $over\r\n")(_ => ()) == 413)
+      // chunked: no length up front, so the cap holds while reading
+      assert(status("Transfer-Encoding: chunked\r\n") { out =>
+        val chunk = Array.fill[Byte](1 << 20)(' '.toByte)
+        var left = over
+        while (left > 0) {
+          val n = math.min(left, chunk.length)
+          out.write(s"${n.toHexString}\r\n".getBytes(ISO_8859_1))
+          out.write(chunk, 0, n)
+          out.write("\r\n".getBytes(ISO_8859_1))
+          left -= n
+        }
+        out.write("0\r\n\r\n".getBytes(ISO_8859_1))
+      } == 413)
+      assert(post(port, "/api/v1/write",
+        """{"namespace":"ns","measurement":"t","value":"1","timestamp":1}""")
+        .statusCode() == 200)
     }
   }
 
