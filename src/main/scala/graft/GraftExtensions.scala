@@ -8,8 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression,
 /** Declarative library entry point: a session built with
   * `spark.sql.extensions=graft.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)`) gets the native graft
-  * expressions as SQL functions AND the custom join strategies
-  * (as-of + interval sweep) — no imperative register calls. The
+  * expressions as SQL functions, the custom join strategies
+  * (as-of + interval sweep) AND literal-independent generated code for
+  * filters ([[graft.plans.ParameterizeLiterals]]) — no imperative
+  * register calls. The
   * imperative paths ([[graft.functions.GraftFunctions.register]],
   * [[graft.plans.GraftAsof.ensureRegistered]],
   * [[graft.plans.GraftInterval.ensureRegistered]]) stay for sessions
@@ -45,5 +47,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
     ext.injectOptimizerRule(_ => graft.functions.DotProductRewrite)
+    // the pre-columnar slot runs before CollapseCodegenStages, on the
+    // adaptive and the non-adaptive path alike
+    ext.injectColumnar(_ => new org.apache.spark.sql.execution.ColumnarRule {
+      override def preColumnarTransitions = graft.plans.ParameterizeLiterals
+    })
   }
 }

@@ -163,7 +163,7 @@ final class BloomStore(spark: SparkSession, tier: ParquetTier,
           val built = mutable.Map[String, FileIdx](missing.map(f =>
             f -> FileIdx(new Array[Long](Words), None,
               numZones = Some((None, None)))): _*)
-          val df = tier.readFiles(spark, ns, table, missing, None)
+          val df = tier.readPinned(spark, snap, missing, None)
           // string columns ONLY: on a non-string column (timestamp),
           // `col = 'literal'` coerces the LITERAL to the column type,
           // so rows can match while their string cast differs from

@@ -75,6 +75,12 @@ class LynxEngine(
   private val MaxCachedResultRows = 10000
   private[graft] val resultCacheHits =
     new java.util.concurrent.atomic.AtomicLong
+  private[graft] val resultCacheMisses =
+    new java.util.concurrent.atomic.AtomicLong
+  /** (hits, misses) of the tier's per-version schema cache. */
+  private[graft] def tierSchemaCacheCounts: (Long, Long) =
+    tier.fold((0L, 0L))(t =>
+      (t.schemaCacheHits.get, t.schemaCacheMisses.get))
   private val resultCache =
     new java.util.LinkedHashMap[AnyRef, QueryResult](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -272,8 +278,11 @@ class LynxEngine(
       s"$what is not a storable name (path separators and '..' are " +
         s"not allowed): '$s'")
 
+  /** Refuses a batch before anything is logged, with an
+    * [[LynxEngine.InvalidWriteException]] naming the first bad row.
+    */
   private def validateTags(ws: Seq[WriteRequest]): Unit =
-    ws.foreach { w =>
+    try ws.foreach { w =>
       // the NUL prefix is the WAL marker class (seal markers, stream
       // brackets, hwm records): a data row carrying it would replay
       // as a marker — poisoning a sink's high-water mark or opening
@@ -288,6 +297,9 @@ class LynxEngine(
       w.metadata.keys.foreach(k => require(
         k != "timestamp" && k != "value" && !k.startsWith("__lynx"),
         s"reserved tag key: $k"))
+    } catch {
+      case e: IllegalArgumentException =>
+        throw new LynxEngine.InvalidWriteException(e.getMessage)
     }
 
   /** Caller holds writeLock and has already buffered `ws`. A table
@@ -895,7 +907,7 @@ class LynxEngine(
           tier.foreach(t => pinned.values.foreach(t.release))
           resultCacheHits.incrementAndGet()
           return Some(r)
-        case None =>
+        case None => resultCacheMisses.incrementAndGet()
       }
     }
     // lease() is documented never-throwing, but anything escaping this
@@ -933,6 +945,11 @@ class LynxEngine(
       // no file-path relations for untrusted SQL (SELECT * FROM
       // parquet.`/path` would read arbitrary host files)
       session.conf.set("spark.sql.runSQLOnFiles", "false")
+      // no per-session artifact classloader: with one, every task of
+      // this session runs under a classloader of its own, and the
+      // codegen cache (keyed on the classloader) compiles each query's
+      // classes anew. The SQL surface cannot add artifacts anyway.
+      session.conf.set("spark.sql.artifact.isolation.enabled", "false")
       // per-query sessions get a fresh function registry; re-register
       // the native graft functions so the SQL surface always has them
       // (sessions built with GraftExtensions inherit them anyway —
@@ -948,9 +965,10 @@ class LynxEngine(
             // bloom file skipping: drop manifest files whose value
             // blooms exclude every harvested `col = 'literal'`
             // conjunct for this table. If everything is skipped, keep
-            // one file so the read still yields the schema — its rows
-            // provably fail the predicate and the SQL filter removes
-            // them (the ParquetTier.readFiles day-prune convention).
+            // one file so the scan has a path — its rows provably fail
+            // the predicate and the SQL filter removes them (the
+            // ParquetTier.readFiles day-prune convention). The view's
+            // columns are the pinned version's, whatever was kept.
             val bloomed = valueBlooms match {
               case Some(bs) =>
                 val afterEq = eqByTable.getOrElse(t.toLowerCase, Nil)
@@ -974,7 +992,7 @@ class LynxEngine(
             }
             val toRead =
               if (bloomed.nonEmpty) bloomed else snap.files.take(1)
-            tier.map(_.readFiles(session, namespace, t, toRead,
+            tier.map(_.readPinned(session, snap, toRead,
               dayBoundsByTable.get(t.toLowerCase)))
           }
         val df = (mem, sealedDf) match {
@@ -1031,6 +1049,12 @@ class LynxEngine(
 }
 
 object LynxEngine {
+
+  /** A write refused by validation before its WAL append (nothing of
+    * it is logged or buffered) — a client error, HTTP 422.
+    */
+  final class InvalidWriteException(msg: String)
+      extends IllegalArgumentException(msg)
 
   /** A write refused because its namespace is migration-fenced — the
     * HTTP layer maps this to 422 + Retry-After (transient for a

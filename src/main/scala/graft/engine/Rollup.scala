@@ -147,7 +147,7 @@ final class RollupStore(spark: SparkSession, tier: ParquetTier,
           Map[Option[String], (Long, java.math.BigDecimal)]] =
         if (missing.isEmpty) Map.empty
         else {
-          val rows = tier.readFiles(spark, ns, table, missing, None)
+          val rows = tier.readPinned(spark, snap, missing, None)
             .withColumn("__file", input_file_name())
             .groupBy(col("__file"), col(groupCol).cast("string").as("g"))
             .agg(count(lit(1)).as("c"),

@@ -288,7 +288,8 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
     *  - 422 + Retry-After for a migration-fenced namespace (transient
     *    for a racing writer: a retry after the router flip lands on
     *    the new owner, so it must differ from a permanent 4xx);
-    *  - 422 {"error"} for an IllegalArgumentException when
+    *  - 422 {"error"} for a write refused by validation before its
+    *    WAL append, and for an IllegalArgumentException when
     *    `clientErrors` (the message carries the bound the caller
     *    broke);
     *  - otherwise 500 (reference main.rs:84-87, bad SQL included),
@@ -314,6 +315,8 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
                 ex.getResponseHeaders.set("Retry-After", "2")
                 (422, s"""{"error":${
                   Sinks.jsonString(e.getMessage)},"retryable":true}""")
+              case e: LynxEngine.InvalidWriteException =>
+                (422, errorJson(e.getMessage))
               case e: IllegalArgumentException if clientErrors =>
                 (422, errorJson(e.getMessage))
               case e: Exception =>
@@ -329,8 +332,9 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
   server.createContext("/health", (ex: HttpExchange) => respond(ex, 200))
 
   // operational introspection (extension; the reference exposes only
-  // /health): buffered row/namespace counts and result-cache hits as
-  // one flat JSON object — enough for a scrape without a client lib
+  // /health): buffered row/namespace counts and result-cache and
+  // tier-schema-cache hits and misses as one flat JSON object —
+  // enough for a scrape without a client lib
   server.createContext("/metrics", (ex: HttpExchange) => {
     try {
       // one rowCounts snapshot feeds both counters, so a concurrent
@@ -360,6 +364,7 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
         }.mkString(""","stream_hwm":{""", ",", "}")
       // WAL tail repairs at the last startup: data-affecting events
       // an operator must see without grepping stderr
+      val (schemaHits, schemaMisses) = engine.tierSchemaCacheCounts
       val recov = engine.walRecoveries
       val recovJson =
         if (recov.isEmpty) ""
@@ -372,6 +377,9 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
         s"""{"buffered_rows":$rows""" +
           s""","namespaces":$namespaces""" +
           s""","result_cache_hits":${engine.resultCacheHits.get}""" +
+          s""","result_cache_misses":${engine.resultCacheMisses.get}""" +
+          s""","tier_schema_cache_hits":$schemaHits""" +
+          s""","tier_schema_cache_misses":$schemaMisses""" +
           annDrift + hwmJson + recovJson + "}")
     } catch {
       case e: Exception =>

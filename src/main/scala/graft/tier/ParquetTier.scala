@@ -3,8 +3,12 @@ package graft.tier
 import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Columnar tier for sealed buffer data — the 100 TB path the
   * reference lacks (it keeps the whole dataset in RAM and the WAL
@@ -42,8 +46,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * staging survived (idempotent), and [[cleanStaging]] discards
   * markerless staging dirs, whose rows replay back into the buffer.
   *
-  * Schema evolution: tag columns appear over time, so sealed segments
-  * are read with `mergeSchema=true` and the engine NULL-fills via
+  * Schema evolution: tag columns appear over time, so a manifest
+  * version's schema is the merge of all its files' schemas, computed
+  * once per version (versions are immutable) and passed to every read
+  * of that version; files lacking a column read it as NULL, and the
+  * engine NULL-fills the buffer side via
   * `unionByName(allowMissingColumns)` — preserving the reference's
   * widening-schema semantics (lynx.rs:93-116) on columnar storage.
   */
@@ -204,6 +211,7 @@ final class ParquetTier(root: File,
     val dst = new File(dir, f"v$v%09d.list")
     if (!tmp.renameTo(dst))
       throw new IllegalStateException(s"manifest publish failed: $dst")
+    dropSchema(ns, table)
   }
 
   /** Trash records as (createdMillis, supersededVersion, file): the
@@ -410,7 +418,7 @@ final class ParquetTier(root: File,
         held = lease(snap)
         if (held.files.nonEmpty &&
             held.files.forall(p => new File(p).isFile))
-          Some(f(readFiles(spark, ns, table, held.files, None)))
+          Some(f(readPinned(spark, held, held.files, None)))
         else None
       } finally release(held)
     }
@@ -546,21 +554,42 @@ final class ParquetTier(root: File,
   def read(spark: SparkSession, ns: String, table: String): DataFrame =
     readFiles(spark, ns, table, dataFiles(ns, table), None)
 
-  /** Read a pinned file set; `basePath` keeps the `__lynx_day=`
-    * directory parsing so `dayBounds` (inclusive yyyy-MM-dd strings)
-    * prunes partitions before any file I/O.
+  /** Read a subset of a pinned file set; `basePath` keeps the
+    * `__lynx_day=` directory parsing so `dayBounds` (inclusive
+    * yyyy-MM-dd strings) prunes partitions before any file I/O.
     *
-    * The pruning must happen on the FILE LIST, not only as a
-    * partition-column filter: `mergeSchema=true` reads every listed
-    * file's footer eagerly at `spark.read` time, so a filter-only
-    * prune still pays footer I/O proportional to the whole table —
-    * the dominant cost of a one-day query over years of data. A file
-    * whose day can't be parsed from its path is kept (conservative),
-    * and the column filter stays on as the correctness net.
+    * The schema is that of the table's current manifest version when
+    * it lists every one of `files` (see [[readPinned]]), taken from
+    * the per-version cache, so a warm read runs no footer-reading
+    * Spark job and its columns never depend on which files pruning
+    * kept. Other files (a pre-manifest table, or a version superseded
+    * since it was pinned) are read with their own merged schema.
+    *
+    * The day pruning happens on the FILE LIST as well as in a
+    * partition-column filter, so excluded days are never listed or
+    * opened. A file whose day can't be parsed from its path is kept
+    * (conservative), and the column filter stays on as the
+    * correctness net.
     */
   def readFiles(spark: SparkSession, ns: String, table: String,
       files: Seq[String],
-      dayBounds: Option[(String, String)]): DataFrame = {
+      dayBounds: Option[(String, String)]): DataFrame =
+    scan(spark, ns, table, files, dayBounds,
+      schemaOf(spark, ns, table, files))
+
+  /** [[readFiles]] for a subset `files` of the pinned snapshot `snap`:
+    * the schema is that of the snapshot's own manifest version, the
+    * merge of all of its files.
+    */
+  def readPinned(spark: SparkSession, snap: TierSnapshot,
+      files: Seq[String],
+      dayBounds: Option[(String, String)]): DataFrame =
+    scan(spark, snap.ns, snap.table, files, dayBounds,
+      versionSchema(spark, snap.ns, snap.table, snap.version, snap.files))
+
+  private def scan(spark: SparkSession, ns: String, table: String,
+      files: Seq[String], dayBounds: Option[(String, String)],
+      schema: StructType): DataFrame = {
     import org.apache.spark.sql.functions.col
     val inRange: String => Boolean = dayBounds match {
       case Some((lo, hi)) => path =>
@@ -571,11 +600,10 @@ final class ParquetTier(root: File,
       case None => _ => true
     }
     val listed = files.filter(inRange)
-    // all files pruned: keep one so the read still yields the schema;
-    // the day filter below removes every row without scanning data
+    // all files pruned: keep one so the scan has a path; the day
+    // filter below removes every row without scanning data
     val toRead = if (listed.nonEmpty) listed else files.take(1)
-    val df = spark.read
-      .option("mergeSchema", "true")
+    val df = spark.read.schema(schema)
       .option("basePath", tableDir(ns, table).getPath)
       .parquet(toRead: _*)
     val pruned = dayBounds match {
@@ -586,6 +614,89 @@ final class ParquetTier(root: File,
     }
     pruned.drop(DayCol)
   }
+
+  // ---------------------------------------------------- version schemas
+
+  // (ns, table) -> the schema of one published version. Publishing a
+  // newer version drops the entry, so at most one version per table
+  // is held and the cache needs no size bound.
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), ParquetTier.VersionSchema]
+  private[graft] val schemaCacheHits = new AtomicLong
+  private[graft] val schemaCacheMisses = new AtomicLong
+
+  private def dropSchema(ns: String, table: String): Unit =
+    schemas.remove((ns, table))
+
+  /** Merged schema of `files`, the `__lynx_day` partition column
+    * included: one Spark job that reads every footer. `tolerant` skips
+    * footers that cannot be read.
+    */
+  private def inferSchema(spark: SparkSession, ns: String, table: String,
+      files: Seq[String], tolerant: Boolean = false): StructType =
+    spark.read.option("mergeSchema", "true")
+      .option("ignoreCorruptFiles", tolerant.toString)
+      .option("basePath", tableDir(ns, table).getPath)
+      .parquet(files: _*).schema
+
+  /** Schema of manifest `version`, which lists `files`. Published
+    * versions are immutable, so each is inferred once; version 0 (the
+    * pre-manifest directory walk) can change and is inferred on every
+    * call. A cached entry serves only the exact file list it was
+    * merged from, so a table rebuilt under the same version numbers
+    * is inferred afresh.
+    */
+  private def versionSchema(spark: SparkSession, ns: String,
+      table: String, version: Long, files: Seq[String]): StructType = {
+    val cached = Option(schemas.get((ns, table))).filter(e =>
+      e.version == version && e.files.size == files.size &&
+        files.forall(f => e.files(absolute(f))))
+    cached match {
+      case Some(e) =>
+        schemaCacheHits.incrementAndGet()
+        e.schema
+      case None =>
+        schemaCacheMisses.incrementAndGet()
+        try {
+          val s = inferSchema(spark, ns, table, files)
+          if (version > 0)
+            schemas.merge((ns, table),
+              ParquetTier.VersionSchema(version, files.map(absolute).toSet, s),
+              (old, nu) => if (nu.version >= old.version) nu else old)
+          s
+        } catch {
+          // a footer that cannot be read: merge the readable ones for
+          // this read only. A scan that reaches the bad file still
+          // fails; one whose pruning skips it succeeds, as it did when
+          // only the kept files were inferred. Nothing is cached, so a
+          // transient read fault is not kept for the version.
+          case NonFatal(_) =>
+            inferSchema(spark, ns, table, files, tolerant = true)
+        }
+    }
+  }
+
+  /** Schema for [[readFiles]]: the current version's when it lists
+    * all of `files`, else the files' own merged schema.
+    */
+  private def schemaOf(spark: SparkSession, ns: String, table: String,
+      files: Seq[String]): StructType = {
+    val dir = tableDir(ns, table)
+    readManifestVersioned(ns, table)
+      .map { case (v, rel) => (v, rel.map(new File(dir, _).getPath)) }
+      .filter { case (_, all) =>
+        val listed = all.map(absolute).toSet
+        files.forall(f => listed(absolute(f)))
+      } match {
+        case Some((v, all)) => versionSchema(spark, ns, table, v, all)
+        case None =>
+          schemaCacheMisses.incrementAndGet()
+          inferSchema(spark, ns, table, files)
+      }
+  }
+
+  private def absolute(path: String): String =
+    new File(path).getAbsolutePath
 
   // ------------------------------------------------- snapshot transfer
 
@@ -737,6 +848,7 @@ final class ParquetTier(root: File,
       val dst = new File(mdir, f"v$version%09d.list")
       if (!tmp.renameTo(dst))
         throw new IllegalStateException(s"manifest publish failed: $dst")
+      dropSchema(ns, table)
       pending.delete()
       version
     } finally if (staging.exists()) deleteRecursively(staging)
@@ -835,9 +947,11 @@ final class ParquetTier(root: File,
     if (currentRel.isEmpty) return
     val staging = stagingDir(ns, table,
       "compact-" + java.util.UUID.randomUUID())
-    val compacted = spark.read.option("mergeSchema", "true")
+    val current = currentRel.map(new File(dir, _).getPath)
+    val compacted = spark.read
+      .schema(versionSchema(spark, ns, table, currentVersion, current))
       .option("basePath", dir.getPath)
-      .parquet(currentRel.map(new File(dir, _).getPath): _*)
+      .parquet(current: _*)
       .repartition(col(DayCol))
     val clustered =
       if (clusterBy.isEmpty) compacted
@@ -868,6 +982,12 @@ object ParquetTier {
     * `__lynx` (enforced at ingest).
     */
   val DayCol = "__lynx_day"
+
+  /** The merged schema of one manifest version and the absolute paths
+    * of the files it lists.
+    */
+  private final case class VersionSchema(version: Long,
+      files: Set[String], schema: StructType)
 
   /** Extracts the day value from a data-file path's partition dir. */
   private[graft] val DayFromPath = """__lynx_day=(\d{4}-\d{2}-\d{2})/""".r

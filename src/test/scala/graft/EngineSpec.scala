@@ -1782,4 +1782,137 @@ class EngineSpec extends AnyFunSuite {
       .sortBy(_.toString)
     assert(got == want)
   }
+
+  private val dayUs = 86400L * 1000000L
+
+  test("a tier view's columns are its pinned version's, even when bloom " +
+    "skipping kept no file") {
+    val tier = new ParquetTier(Files.createTempDirectory("view-bloom").toFile)
+    val e = newEngine(Some(tier))
+    e.write(WriteRequest("ns", "t", "1", Map("a" -> TagString("x")), 1L))
+    e.seal("ns", "t")
+    e.write(WriteRequest("ns", "t", "2",
+      Map("a" -> TagString("x"), "b" -> TagString("y")), dayUs + 1))
+    e.seal("ns", "t")
+    assert(e.valueBlooms.get.index("ns", "t", "a") == 2)
+    // every file is skipped; the one kept for the scan predates `b`
+    val n = e.query("ns",
+      "SELECT count(*) AS n FROM t WHERE a = 'nope' AND b = 'y'").get
+    assert(n.rows.map(_.getLong(0)) == Seq(0L))
+    val all = e.query("ns", "SELECT * FROM t WHERE a = 'nope'").get
+    assert(all.schema.fieldNames.toSeq == Seq("timestamp", "value", "a", "b"))
+  }
+
+  test("a tier view's columns are its pinned version's, even when day " +
+    "pruning kept only days older than a tag key") {
+    val tier = new ParquetTier(Files.createTempDirectory("view-days").toFile)
+    val e = newEngine(Some(tier))
+    e.write(WriteRequest("ns", "t", "1", Map("a" -> TagString("x")), 1L))
+    e.seal("ns", "t")
+    e.write(WriteRequest("ns", "t", "2",
+      Map("a" -> TagString("x"), "b" -> TagString("y")), 3 * dayUs + 1))
+    e.seal("ns", "t")
+    val r = e.query("ns", "SELECT count(*) AS n FROM t WHERE timestamp >= " +
+      "TIMESTAMP '1970-01-01 00:00:00' AND timestamp < " +
+      "TIMESTAMP '1970-01-02 00:00:00' AND b IS NULL").get
+    assert(r.rows.map(_.getLong(0)) == Seq(1L))
+  }
+
+  test("tier schemas are inferred once per manifest version: a warm " +
+    "query runs no schema job; a new version and an as-of read each " +
+    "see their own columns") {
+    val spark = SparkFixture.spark
+    val tier = new ParquetTier(Files.createTempDirectory("schema-cache").toFile)
+    val e = newEngine(Some(tier))
+    (0 until 3).foreach(d => e.write(WriteRequest("ns", "t", d.toString,
+      Map("a" -> TagString("x")), d * dayUs + 1)))
+    e.seal("ns", "t") // v1
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val schemaJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        // schema inference is the one job a reader runs while the
+        // DataFrame is built; execution jobs start from an action
+        if (j.stageInfos.exists(_.details.contains("DataFrameReader.parquet")))
+          schemaJobs.incrementAndGet()
+      }
+    }
+    // (jobs, schema-inference jobs) one query ran
+    def counted(sql: String, asOf: Option[Long] = None)
+        : (Int, Int, graft.engine.QueryResult) = {
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+      jobs.set(0); schemaJobs.set(0)
+      val r = e.query("ns", sql, asOf).get
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+      (jobs.get, schemaJobs.get, r)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val sql = "SELECT count(*) AS n FROM t WHERE " +
+        "timestamp >= TIMESTAMP '1970-01-02 00:00:00'"
+      val (coldJobs, coldSchema, cold) = counted(sql)
+      assert(coldSchema == 1, "the first read of a version infers it")
+      assert(cold.rows.map(_.getLong(0)) == Seq(2L))
+      val (hits0, _) = e.tierSchemaCacheCounts
+      val (warmJobs, warmSchema, warm) = counted(sql + " ")
+      assert(warmSchema == 0, "a warm query must not infer the schema")
+      assert(warmJobs == coldJobs - 1, s"cold $coldJobs, warm $warmJobs")
+      assert(warm.rows == cold.rows)
+      assert(e.tierSchemaCacheCounts._1 == hits0 + 1)
+      // a seal that adds a tag key publishes v2, whose view has it
+      e.write(WriteRequest("ns", "t", "9",
+        Map("a" -> TagString("x"), "b" -> TagString("y")), 4 * dayUs + 1))
+      e.seal("ns", "t")
+      val (_, newSchema, v2) = counted("SELECT * FROM t WHERE b = 'y'")
+      assert(newSchema == 1, "a new version is inferred once")
+      assert(v2.schema.fieldNames.toSeq == Seq("timestamp", "value", "a", "b"))
+      assert(v2.rows.map(_.getString(1)) == Seq("9"))
+      // the as-of read of v1 still sees v1's columns only
+      val (_, _, v1) = counted("SELECT * FROM t", Some(1L))
+      assert(v1.schema.fieldNames.toSeq == Seq("timestamp", "value", "a"))
+      assert(v1.rows.size == 3)
+      val gone = intercept[Exception](e.query("ns", "SELECT b FROM t", Some(1L)))
+      assert(gone.getMessage.contains("b"), gone.getMessage)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("queries that differ only in numeric and timestamp literals " +
+    "compile no new classes on a GraftExtensions session") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def load(spark: org.apache.spark.sql.SparkSession): LynxEngine = {
+      val dir = Files.createTempDirectory("codegen-reuse").toFile
+      val e = new LynxEngine(spark, dir, 1024 * 1024,
+        Some(new ParquetTier(new java.io.File(dir, "tier"))))
+      def rows(day: Int) = (0 until 50).map(i => WriteRequest("ns", "cpu",
+        (i * 10).toString, Map("host" -> TagString(s"h${i % 5}")),
+        day * dayUs + i * 1000000L))
+      (0 until 3).foreach(d => e.writeBatch(rows(d)))
+      e.seal("ns", "cpu")
+      e.writeBatch(rows(3)) // RAM tail
+      e
+    }
+    def sql(lo: Long, ts: String, d: Double) =
+      "SELECT count(*) AS n, sum(CAST(value AS BIGINT)) AS s FROM cpu " +
+        s"WHERE timestamp >= TIMESTAMP '$ts' AND CAST(value AS BIGINT) < $lo " +
+        s"AND CAST(value AS DOUBLE) > $d"
+    // compiles run by the second of two queries
+    def secondCompiles(e: LynxEngine): (Long, Seq[Long]) = {
+      e.query("ns", sql(400L, "1970-01-01 12:00:00", -1.5)).get
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val r = e.query("ns", sql(300L, "1970-01-02 00:00:00", 5.0)).get
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        r.rows.head.toSeq.map(_.asInstanceOf[Long]))
+    }
+    // days 1-3, values 10..290 in steps of 10 → 29 rows per day
+    val want = Seq(3L * 29, 3L * (10 to 290 by 10).sum)
+    val (graft, got) = secondCompiles(load(SparkFixture.graft))
+    assert(got == want)
+    assert(graft == 0L, s"$graft classes compiled for a literal change")
+    // the same pair compiles on a session without the rule
+    val (plain, gotPlain) = secondCompiles(load(SparkFixture.spark))
+    assert(gotPlain == want)
+    assert(plain > 0L, "the plain session should compile the new literals")
+  }
 }

@@ -58,7 +58,35 @@ class HttpSpec extends AnyFunSuite {
       val m = metrics()
       assert(m.contains("\"buffered_rows\":1") &&
         m.contains("\"namespaces\":1") &&
-        m.contains("\"result_cache_hits\":1"), s"unexpected metrics: $m")
+        m.contains("\"result_cache_hits\":1") &&
+        m.contains("\"result_cache_misses\":1") &&
+        // no tier on this server: the schema cache is never consulted
+        m.contains("\"tier_schema_cache_hits\":0") &&
+        m.contains("\"tier_schema_cache_misses\":0"),
+        s"unexpected metrics: $m")
+    }
+  }
+
+  test("a write whose namespace or measurement is not a storable name " +
+    "gets 422 with an error body; a valid write still gets 200") {
+    withServer { port =>
+      for ((ns, m) <- Seq(("..", "cpu"), ("a/b", "cpu"), ("ok", ".."),
+          ("ok", "x\\\\y"))) {
+        val r = post(port, "/api/v1/write",
+          s"""{"namespace":"$ns","measurement":"$m","value":"1",
+             |"metadata":{},"timestamp":1}""".stripMargin)
+        assert(r.statusCode() == 422, s"$ns/$m: ${r.body()}")
+        assert(r.body().startsWith("{\"error\":") &&
+          r.body().contains("not a storable name"), r.body())
+      }
+      val ok = post(port, "/api/v1/write",
+        """{"namespace":"ok","measurement":"cpu","value":"1",
+          |"metadata":{},"timestamp":1}""".stripMargin)
+      assert(ok.statusCode() == 200)
+      val q = post(port, "/api/v1/query",
+        """{"namespace":"ok","query":"SELECT count(*) AS n FROM cpu",
+          |"format":"json"}""".stripMargin)
+      assert(q.body() == "[{\"n\":1}]", q.body())
     }
   }
 

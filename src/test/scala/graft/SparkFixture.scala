@@ -17,4 +17,20 @@ object SparkFixture {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A second session on the same SparkContext, built with
+    * [[GraftExtensions]] (the way the lynx server builds its own); the
+    * shared session above stays the active and default one.
+    */
+  lazy val graft: SparkSession = {
+    val base = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder().withExtensions(new GraftExtensions)
+      .getOrCreate()
+    finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
 }
