@@ -4,10 +4,12 @@ import java.io.File
 import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement,
-  LogicalPlan}
+  LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.types._
 
 import graft.buffer.{BufferScan, MemBuffer, MeasurementsView}
@@ -29,15 +31,17 @@ final case class QueryResult(schema: StructType, rows: Seq[Row])
   * snapshot the buffered tables it references (chunk references plus
   * published lengths — no rows are copied under the locks), scan each
   * snapshot as a DataFrame of chunk-sized input partitions with the
-  * dynamically inferred schema, register temp views, delegate to
-  * spark.sql — Catalyst plays the role DataFusion plays behind
-  * lynx.rs:141, which hands DataFusion one Arrow batch.
+  * dynamically inferred schema, bind each frame into the parsed plan
+  * in place of its table reference ([[LynxEngine.bindTables]]) and run
+  * that plan on the engine's one query session — Catalyst plays the
+  * role DataFusion plays behind lynx.rs:141, which hands DataFusion one
+  * Arrow batch.
   *
   * Improvements over the reference, by design (SURVEY.md §3.4):
-  *  - per-query `SparkSession.newSession()` gives each request an
-  *    isolated temp-view catalog, fixing the shared-SessionContext
-  *    race between concurrent queries on the same table name;
-  *  - every table referenced by the query is registered (multi-table
+  *  - a query's tables live only in its own plan, never in a shared
+  *    catalog, fixing the shared-SessionContext race between
+  *    concurrent queries on the same table name;
+  *  - every table referenced by the query is bound (multi-table
   *    joins work instead of depending on stale registrations);
   *  - CTEs and derived tables pass the gatekeeper;
   *  - tag columns appear in deterministic sorted order (the reference
@@ -65,6 +69,26 @@ class LynxEngine(
     annPlacement: Option[(String, Seq[(String, String)])] = None) {
 
   val buffer = new MemBuffer
+
+  // The one session every query of this engine runs on. A bare
+  // newSession starts from the context conf. Nothing changes it after
+  // this block: the gate rejects every command, so no SET, view or
+  // cache statement reaches it.
+  private val querySession: SparkSession = {
+    val s = spark.newSession()
+    // no file-path relations for untrusted SQL (SELECT * FROM
+    // parquet.`/path` would read arbitrary host files)
+    s.conf.set("spark.sql.runSQLOnFiles", "false")
+    // no per-session artifact classloader: with one, tasks run under a
+    // classloader of their own, and the codegen cache (keyed on the
+    // classloader) compiles the classes anew. The SQL surface cannot
+    // add artifacts anyway.
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    // the native graft functions, also for engines hosted on a session
+    // built without GraftExtensions
+    graft.functions.GraftFunctions.register(s)
+    s
+  }
 
   // MVCC-keyed result cache: key = (ns, sql, per-referenced-table
   // (buffer revision, tier manifest version)). Revisions strictly
@@ -776,14 +800,13 @@ class LynxEngine(
     */
   def query(namespace: String, sql: String,
       asOfVersion: Option[Long] = None): Option[QueryResult] = {
-    val parsed = LynxEngine.parse(spark, sql)
+    val parsed = LynxEngine.parse(querySession, sql)
     // EXPLAIN <select> is allowed as an ops nicety (improvement over
     // the reference's SELECT-only surface): every gate below runs on
     // the EXPLAINED plan, so EXPLAIN cannot smuggle DML/banned
     // functions past the checks, and plan text is never cached
     val (plan, isExplain) = parsed match {
-      case ec: org.apache.spark.sql.execution.command.ExplainCommand =>
-        (ec.logicalPlan, true)
+      case ec: ExplainCommand => (ec.logicalPlan, true)
       case p => (p, false)
     }
     // expression-level escape hatches: reflect()/java_method() invoke
@@ -941,25 +964,11 @@ class LynxEngine(
           throw new IllegalArgumentException(
             s"version $v of table $name is past the GC window")
 
-      val session = spark.newSession()
-      // no file-path relations for untrusted SQL (SELECT * FROM
-      // parquet.`/path` would read arbitrary host files)
-      session.conf.set("spark.sql.runSQLOnFiles", "false")
-      // no per-session artifact classloader: with one, every task of
-      // this session runs under a classloader of its own, and the
-      // codegen cache (keyed on the classloader) compiles each query's
-      // classes anew. The SQL surface cannot add artifacts anyway.
-      session.conf.set("spark.sql.artifact.isolation.enabled", "false")
-      // per-query sessions get a fresh function registry; re-register
-      // the native graft functions so the SQL surface always has them
-      // (sessions built with GraftExtensions inherit them anyway —
-      // this covers engines hosted on a plain session)
-      graft.functions.GraftFunctions.register(session)
       val inMem = snapshot.getOrElse(
         TreeMap.empty[String, TreeMap[String, MeasurementsView]])
-      for (t <- tables) {
+      val frames = tables.map { t =>
         val mem: Option[DataFrame] =
-          inMem.get(t).map(LynxEngine.toDataFrame(session, _))
+          inMem.get(t).map(LynxEngine.toDataFrame(querySession, _))
         val sealedDf: Option[DataFrame] =
           tierSnaps.get(t).filter(_.files.nonEmpty).flatMap { snap =>
             // bloom file skipping: drop manifest files whose value
@@ -967,7 +976,7 @@ class LynxEngine(
             // conjunct for this table. If everything is skipped, keep
             // one file so the scan has a path — its rows provably fail
             // the predicate and the SQL filter removes them (the
-            // ParquetTier.readFiles day-prune convention). The view's
+            // ParquetTier.readFiles day-prune convention). The frame's
             // columns are the pinned version's, whatever was kept.
             val bloomed = valueBlooms match {
               case Some(bs) =>
@@ -992,7 +1001,7 @@ class LynxEngine(
             }
             val toRead =
               if (bloomed.nonEmpty) bloomed else snap.files.take(1)
-            tier.map(_.readPinned(session, snap, toRead,
+            tier.map(_.readPinned(querySession, snap, toRead,
               dayBoundsByTable.get(t.toLowerCase)))
           }
         val df = (mem, sealedDf) match {
@@ -1006,10 +1015,17 @@ class LynxEngine(
         // timestamp, value, then tags sorted (SURVEY.md §1.4 deviation).
         val ordered = Seq("timestamp", "value") ++
           df.columns.filterNot(Set("timestamp", "value")).sorted
-        df.select(ordered.map(org.apache.spark.sql.functions.col): _*)
-          .createOrReplaceTempView(t)
+        t.toLowerCase -> df.select(
+          ordered.map(org.apache.spark.sql.functions.col): _*)
+          .queryExecution.analyzed
       }
-      val df = session.sql(sql)
+      // names bind case-insensitively: on a case-only clash the table
+      // listed last binds every spelling
+      val bound = LynxEngine.bindTables(plan, frames.toMap)
+      val df = GraftSqlBridge.ofRows(querySession, parsed match {
+        case ec: ExplainCommand => ec.copy(logicalPlan = bound)
+        case _ => bound
+      })
       // The reference collects unboundedly (lynx.rs:142); at scale a
       // `SELECT * FROM big` over the tier would OOM the driver, so the
       // engine can cap the materialized result (documented deviation:
@@ -1102,7 +1118,7 @@ object LynxEngine {
     // are not base tables.
     def walk(p: LogicalPlan): (Seq[String], Seq[String]) = {
       val withs = p.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith => w
+        case w: UnresolvedWith => w
       }
       val cteNames = withs.flatMap(_.cteRelations.map(_._1))
       // descend into CTE definitions (not `children`) and into
@@ -1110,8 +1126,7 @@ object LynxEngine {
       // expressions, invisible to plan.collect)
       val nested = (withs.flatMap(_.cteRelations.map(_._2)) ++
         p.flatMap(_.expressions.flatMap(_.collect {
-          case sub: org.apache.spark.sql.catalyst.expressions
-            .SubqueryExpression => sub.plan
+          case sub: SubqueryExpression => sub.plan
         }))).map(walk)
       val rels = p.collect {
         case r: UnresolvedRelation => r.multipartIdentifier.last
@@ -1124,6 +1139,40 @@ object LynxEngine {
       throw new IllegalArgumentException(
         "only basic 'SELECT .. FROM' style queries are supported")
     tables
+  }
+
+  /** Bind each table's frame into a parsed query: every single-part
+    * relation named in `frames` (keys lower-case) becomes
+    * `SubqueryAlias(name, frame)`, so the query runs without a catalog
+    * entry. Scoping follows Spark's CTE substitution, so a reference
+    * binds exactly where a temp view of that name would resolve: a
+    * WITH definition (case-insensitively) shadows a table of the same
+    * name in the definitions after it and in the WITH's body, a
+    * recursive definition also in itself, and scopes reach into
+    * subquery expressions.
+    */
+  def bindTables(plan: LogicalPlan,
+      frames: Map[String, LogicalPlan]): LogicalPlan = {
+    def bind(p: LogicalPlan, shadowed: Set[String]): LogicalPlan = p match {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 &&
+          !r.isStreaming && !shadowed(r.multipartIdentifier.head.toLowerCase) =>
+        val name = r.multipartIdentifier.head
+        frames.get(name.toLowerCase).fold[LogicalPlan](r)(SubqueryAlias(name, _))
+      case w: UnresolvedWith =>
+        var scope = shadowed
+        val defs = w.cteRelations.map { case (name, sub, depth) =>
+          val key = name.toLowerCase
+          val inner = if (w.allowRecursion) scope + key else scope
+          scope += key
+          (name, sub.copy(child = bind(sub.child, inner)), depth)
+        }
+        w.copy(child = bind(w.child, scope), cteRelations = defs)
+      case other =>
+        other.mapChildren(bind(_, shadowed)).transformExpressions {
+          case e: SubqueryExpression => e.withNewPlan(bind(e.plan, shadowed))
+        }
+    }
+    bind(plan, Set.empty)
   }
 
   /** Expression-level deny list for the untrusted-SQL path. Spark's
@@ -1203,8 +1252,7 @@ object LynxEngine {
     }
     def fromPlan(p: LogicalPlan): Seq[String] = {
       val ctePlans = p.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
-          w.cteRelations.map(_._2)
+        case w: UnresolvedWith => w.cteRelations.map(_._2)
       }.flatten
       p.flatMap(_.expressions.flatMap(fromExpr)) ++
         ctePlans.flatMap(fromPlan)
@@ -1219,7 +1267,6 @@ object LynxEngine {
     * which matches SQL resolution order.
     */
   private def inlineCtes(plan: LogicalPlan): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
     def substitute(p: LogicalPlan,
         defs: Map[String, LogicalPlan]): LogicalPlan =
       if (defs.isEmpty) p

@@ -658,9 +658,6 @@ object LynxServerMain {
       .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the HTTP SQL surface gets the native graft functions too (the
-    // extension covers fresh sessions; this covers a pre-existing one)
-    graft.functions.GraftFunctions.register(spark)
     val engine = new LynxEngine(spark, walDir, maxSeg,
       tier = tierDir.map(new graft.tier.ParquetTier(_)),
       maxResultRows = maxRows, walGroupCommitMillis = groupCommitMs,

@@ -66,7 +66,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("native graft functions are always callable through the " +
-    "engine SQL surface (per-query sessions self-register)") {
+    "engine SQL surface (the query session registers them)") {
     val e = newEngine()
     e.write(WriteRequest("ns", "m", "abc", Map.empty, 1))
     val r = e.query("ns", "SELECT graft_nfc(value) AS v FROM m").get
@@ -1914,5 +1914,79 @@ class EngineSpec extends AnyFunSuite {
     val (plain, gotPlain) = secondCompiles(load(SparkFixture.spark))
     assert(gotPlain == want)
     assert(plain > 0L, "the plain session should compile the new literals")
+  }
+
+  test("a query's tables bind where Spark resolves a table: CTEs shadow " +
+    "within their scope only, self-joins and subqueries see each frame") {
+    val dayUs = 86400L * 1000000L
+    val e = newEngine(Some(new ParquetTier(
+      Files.createTempDirectory("bind-tier").toFile)))
+    def cpu(v: Int, host: String, day: Int) = WriteRequest("ns", "cpu",
+      v.toString, Map("host" -> TagString(host)), day * dayUs + v)
+    e.writeBatch(Seq(cpu(1, "h1", 0), cpu(2, "h2", 0), cpu(3, "h1", 0),
+      cpu(4, "h2", 0)))
+    e.seal("ns", "cpu")
+    e.writeBatch(Seq(cpu(5, "h1", 1), cpu(6, "h3", 1))) // RAM tail
+    e.writeBatch(Seq(
+      WriteRequest("ns", "meta", "zone-a", Map("host" -> TagString("h1")), 1),
+      WriteRequest("ns", "meta", "zone-b", Map("host" -> TagString("h2")), 2)))
+    def rows(sql: String): Seq[Seq[Any]] =
+      e.query("ns", sql).get.rows.map(_.toSeq)
+    // a user CTE named like a table shadows it, in either letter case
+    assert(rows("WITH meta AS (SELECT 'x' AS host) SELECT count(*) AS n " +
+      "FROM cpu JOIN meta ON cpu.host = meta.host") == Seq(Seq(0L)))
+    assert(rows("WITH CPU AS (SELECT '100' AS value) " +
+      "SELECT sum(CAST(value AS INT)) AS s FROM cpu") == Seq(Seq(100L)))
+    // a CTE inside a scalar subquery leaves the outer table alone
+    assert(rows("SELECT count(*) AS n, (WITH Meta AS (SELECT 'x' AS host) " +
+      "SELECT count(*) FROM Meta) AS m " +
+      "FROM cpu JOIN meta ON cpu.host = meta.host") == Seq(Seq(5L, 1L)))
+    // a self-join over the sealed tier and the RAM tail
+    assert(rows("SELECT count(*) AS n FROM cpu a JOIN cpu b " +
+      "ON a.host = b.host") == Seq(Seq(14L)))
+    // IN and EXISTS subqueries over a second table
+    assert(rows("SELECT sum(CAST(value AS INT)) AS s FROM cpu WHERE host IN " +
+      "(SELECT host FROM meta WHERE value = 'zone-a')") == Seq(Seq(9L)))
+    assert(rows("SELECT count(*) AS n FROM cpu c WHERE EXISTS " +
+      "(SELECT 1 FROM meta m WHERE m.host = c.host)") == Seq(Seq(5L)))
+    // chained CTEs
+    assert(rows("WITH a AS (SELECT host, CAST(value AS INT) AS v FROM cpu), " +
+      "b AS (SELECT host, sum(v) AS s FROM a GROUP BY host) " +
+      "SELECT host, s FROM b ORDER BY host") ==
+      Seq(Seq("h1", 9L), Seq("h2", 6L), Seq("h3", 6L)))
+    // a recursive CTE joined to a table
+    assert(rows("WITH RECURSIVE r(n) AS (SELECT 1 UNION ALL " +
+      "SELECT n + 1 FROM r WHERE n < 3) SELECT count(*) AS c " +
+      "FROM r JOIN cpu ON CAST(cpu.value AS INT) = r.n") == Seq(Seq(3L)))
+  }
+
+  test("live heap stays flat as queries run") {
+    val dayUs = 86400L * 1000000L
+    val e = newEngine(Some(new ParquetTier(
+      Files.createTempDirectory("heap-tier").toFile)))
+    def rows(day: Int) = (0 until 200).map(i => WriteRequest("ns", "cpu",
+      i.toString, Map("host" -> TagString(s"h${i % 10}")),
+      day * dayUs + i * 1000000L))
+    (0 until 3).foreach(d => e.writeBatch(rows(d)))
+    e.seal("ns", "cpu")
+    e.writeBatch(rows(3)) // RAM tail
+    // queries that differ in literals: every one misses the result cache
+    def run(i: Int): Unit = {
+      val r = e.query("ns", "SELECT count(*) AS n FROM cpu WHERE " +
+        s"host = 'h${i % 10}' AND CAST(value AS BIGINT) < ${1000 + i}").get
+      assert(r.rows.head.getLong(0) == 80L)
+    }
+    def liveMb(): Double = {
+      org.apache.spark.ListenerBusBridge.drain(SparkFixture.spark.sparkContext)
+      (0 until 3).foreach { _ => System.gc(); Thread.sleep(100) }
+      val rt = Runtime.getRuntime
+      (rt.totalMemory - rt.freeMemory) / 1048576.0
+    }
+    (0 until 50).foreach(run)
+    val warm = liveMb()
+    (50 until 350).foreach(run)
+    val perQuery = (liveMb() - warm) / 300
+    info(f"live heap $warm%.0f MB after 50 queries, $perQuery%.3f MB/query after")
+    assert(perQuery < 0.15, f"live heap grew $perQuery%.3f MB per query")
   }
 }
