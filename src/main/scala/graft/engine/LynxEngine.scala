@@ -47,6 +47,12 @@ final case class QueryResult(schema: StructType, rows: Seq[Row])
   *  - tag columns appear in deterministic sorted order (the reference
   *    iterates a HashSet — nondeterministic across runs, lynx.rs:110).
   *
+  * Startup (reference lynx.rs:45-53): [[LynxEngine.recover]] rebuilds
+  * the buffer, segment ids, stream high-water marks and tail repairs
+  * from the WAL without Spark. The constructor runs it unless handed
+  * its result as `recovered`, which lets `LynxServerMain` replay while
+  * Spark starts.
+  *
   * At scale the buffer tiers to day-partitioned parquet via
   * [[graft.tier.ParquetTier]]; queries union the sealed segments with
   * the in-RAM tail, and Catalyst prunes `day=` partitions the
@@ -66,9 +72,20 @@ class LynxEngine(
     autoBloomColumns: Seq[String] = Nil,
     annRebuildThreshold: Option[Double] = None,
     walForceTailTruncate: Boolean = false,
-    annPlacement: Option[(String, Seq[(String, String)])] = None) {
+    annPlacement: Option[(String, Seq[(String, String)])] = None,
+    recovered: Option[LynxEngine.Recovered] = None) {
 
-  val buffer = new MemBuffer
+  // The state replay rebuilt from the WAL directory: recovered here
+  // unless the caller already ran LynxEngine.recover on this directory
+  // and tier (LynxServerMain replays while Spark starts).
+  private val recovery: LynxEngine.Recovered = recovered match {
+    case Some(r) =>
+      require(r.walDir.getAbsolutePath == walDir.getAbsolutePath,
+        s"recovered ${r.walDir}, not $walDir")
+      r
+    case None => LynxEngine.recover(walDir, tier, walForceTailTruncate)
+  }
+  val buffer: MemBuffer = recovery.buffer
 
   // The one session every query of this engine runs on. A bare
   // newSession starts from the context conf. Nothing changes it after
@@ -117,7 +134,7 @@ class LynxEngine(
   // writeStreamBatch advances it in the same writeLock hold that made
   // the batch durable. Guarded by writeLock after construction.
   private val streamHwm =
-    scala.collection.mutable.Map.empty[String, Long]
+    scala.collection.mutable.Map.empty[String, Long] ++= recovery.streamHwm
   // Per-sink streaming-QUERY identity of the lane's committed
   // brackets (StreamBatch.QidTag; "" never stored). Replay surfaces
   // it in WAL order (last committed bracket wins); writeStreamBatch
@@ -126,43 +143,19 @@ class LynxEngine(
   // silently skip (the one silent-data-loss path round 12 documented).
   // Guarded by writeLock after construction.
   private val streamQid =
-    scala.collection.mutable.Map.empty[String, String]
-  // tail repairs replay performed (torn-tail truncation, forced
-  // frame-corrupt recovery, zombie-bracket removal) — surfaced in
-  // /metrics so an operator sees data-affecting startup events
-  // without grepping stderr (the ADVICE r13 visibility gap)
-  private val walRecoveryLog =
-    scala.collection.mutable.ArrayBuffer.empty[Wal.WalRecovery]
-  def walRecoveries: Seq[Wal.WalRecovery] = walRecoveryLog.toSeq
-  private val (replayedHighest, replayedIds) =
-    Wal.replay(walDir, buffer, m => {
-      // a BULK marker's staged files never came from the buffer:
-      // draining here would lose acknowledged plain writes buffered
-      // before the marker (they were never part of the bulk seal)
-      if (!graft.core.SealMarker.isBulk(m))
-        buffer.drainTable(m.value, m.measurement)
-      // re-drive the tier publish recorded in the marker: idempotent,
-      // so a crash anywhere between marker and publish converges here
-      for {
-        t <- tier
-        sid <- m.metadata.get(graft.core.SealMarker.StagingTag)
-      } {
-        val files = m.metadata.get(graft.core.SealMarker.FilesTag)
-          .map(_.render.split("\n").toSeq.filter(_.nonEmpty))
-          .getOrElse(Nil)
-        t.publish(m.value, m.measurement, sid.render, files)
-      }
-    }, (sink, bid, qid) => {
-      val cur = streamHwm.getOrElse(sink, -1L)
-      if (bid > cur) streamHwm(sink) = bid
-      if (qid.nonEmpty) streamQid(sink) = qid // WAL order: last wins
-    }, walForceTailTruncate, walRecoveryLog += _)
-  // staging dirs whose marker never became durable: their rows just
-  // replayed into the buffer, so the staged copies must be dropped
-  tier.foreach(_.cleanStaging())
-  val wal = new Wal(walDir, replayedHighest + 1, maxSegmentSize,
+    scala.collection.mutable.Map.empty[String, String] ++= recovery.streamQid
+  /** Tail repairs replay performed at startup (torn-tail truncation,
+    * forced frame-corrupt recovery, zombie-bracket removal) — surfaced
+    * in /metrics so an operator sees data-affecting startup events
+    * without grepping stderr.
+    */
+  def walRecoveries: Seq[Wal.WalRecovery] = recovery.recoveries
+  /** Startup replay's wall time (ms) and the WAL frames it decoded. */
+  def walReplayMs: Long = recovery.replayMs
+  def walReplayedRecords: Long = recovery.records
+  val wal = new Wal(walDir, recovery.highestSegment + 1, maxSegmentSize,
     groupCommitMillis = walGroupCommitMillis, fsyncOnFlush = walFsync)
-  def replayedSegments: Seq[Long] = replayedIds
+  def replayedSegments: Seq[Long] = recovery.segments
 
   /** Incremental per-segment rollup maintenance over tiered tables —
     * see [[RollupStore]]; present only when a tier is configured
@@ -1066,6 +1059,59 @@ class LynxEngine(
 
 object LynxEngine {
 
+  /** An engine's state rebuilt from its WAL directory by [[recover]]:
+    * the replayed buffer, the highest and every observed segment id,
+    * the per-sink stream high-water marks and streaming-query ids, the
+    * tail repairs replay made, its wall time and the frames it decoded.
+    * One engine takes it over; the buffer is that engine's from then on.
+    */
+  final case class Recovered(walDir: File, buffer: MemBuffer,
+      highestSegment: Long, segments: Seq[Long],
+      streamHwm: Map[String, Long], streamQid: Map[String, String],
+      recoveries: Seq[Wal.WalRecovery], replayMs: Long, records: Long)
+
+  /** Crash recovery, without Spark: replay every WAL segment in
+    * `walDir` into a fresh buffer (reference lynx.rs:45-53), re-drive
+    * the tier publish each seal marker records, then drop the tier's
+    * staging dirs whose marker never became durable (their rows just
+    * replayed into the buffer). `forceTailTruncate` is
+    * [[Wal.replay]]'s operator override for refused tail recoveries.
+    * The engine constructor runs this unless it is handed the result.
+    */
+  def recover(walDir: File, tier: Option[ParquetTier],
+      forceTailTruncate: Boolean = false): Recovered = {
+    val t0 = System.nanoTime()
+    val buffer = new MemBuffer
+    val hwm = scala.collection.mutable.Map.empty[String, Long]
+    val qids = scala.collection.mutable.Map.empty[String, String]
+    val repairs = scala.collection.mutable.ArrayBuffer.empty[Wal.WalRecovery]
+    val replayed = Wal.replay(walDir, buffer, m => {
+      // a BULK marker's staged files never came from the buffer:
+      // draining here would lose acknowledged plain writes buffered
+      // before the marker (they were never part of the bulk seal)
+      if (!graft.core.SealMarker.isBulk(m))
+        buffer.drainTable(m.value, m.measurement)
+      // re-drive the tier publish recorded in the marker: idempotent,
+      // so a crash anywhere between marker and publish converges here
+      for {
+        t <- tier
+        sid <- m.metadata.get(graft.core.SealMarker.StagingTag)
+      } {
+        val files = m.metadata.get(graft.core.SealMarker.FilesTag)
+          .map(_.render.split("\n").toSeq.filter(_.nonEmpty))
+          .getOrElse(Nil)
+        t.publish(m.value, m.measurement, sid.render, files)
+      }
+    }, (sink, bid, qid) => {
+      if (bid > hwm.getOrElse(sink, -1L)) hwm(sink) = bid
+      if (qid.nonEmpty) qids(sink) = qid // WAL order: last wins
+    }, forceTailTruncate, repairs += _)
+    tier.foreach(_.cleanStaging())
+    Recovered(walDir, buffer, replayed.highest, replayed.segments,
+      hwm.toMap, qids.toMap, repairs.toSeq,
+      (System.nanoTime() - t0) / 1000000, replayed.records)
+  }
+
   /** A write refused by validation before its WAL append (nothing of
     * it is logged or buffered) — a client error, HTTP 422.
     */
@@ -1113,66 +1159,63 @@ object LynxEngine {
       })
       throw new IllegalArgumentException(
         "only SELECT queries are supported")
-    // CTE definitions live in UnresolvedWith.cteRelations, which are
-    // not `children` — walk them explicitly. CTE aliases themselves
-    // are not base tables.
-    def walk(p: LogicalPlan): (Seq[String], Seq[String]) = {
-      val withs = p.collect {
-        case w: UnresolvedWith => w
-      }
-      val cteNames = withs.flatMap(_.cteRelations.map(_._1))
-      // descend into CTE definitions (not `children`) and into
-      // subquery expressions (IN/EXISTS/scalar subqueries live inside
-      // expressions, invisible to plan.collect)
-      val nested = (withs.flatMap(_.cteRelations.map(_._2)) ++
-        p.flatMap(_.expressions.flatMap(_.collect {
-          case sub: SubqueryExpression => sub.plan
-        }))).map(walk)
-      val rels = p.collect {
-        case r: UnresolvedRelation => r.multipartIdentifier.last
-      }
-      (rels ++ nested.flatMap(_._1), cteNames ++ nested.flatMap(_._2))
+    // a query must read FROM something, a table or a WITH definition;
+    // the tables are the references no WITH definition shadows
+    val refs = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
+    mapRelations(plan) { (r, isCte) =>
+      refs += ((r.multipartIdentifier.last, isCte))
+      r
     }
-    val (rels, cteNames) = walk(plan)
-    val tables = rels.distinct.filterNot(cteNames.toSet.contains)
-    if (tables.isEmpty)
+    if (refs.isEmpty)
       throw new IllegalArgumentException(
         "only basic 'SELECT .. FROM' style queries are supported")
-    tables
+    refs.collect { case (name, false) => name }.distinct.toSeq
   }
 
-  /** Bind each table's frame into a parsed query: every single-part
-    * relation named in `frames` (keys lower-case) becomes
-    * `SubqueryAlias(name, frame)`, so the query runs without a catalog
-    * entry. Scoping follows Spark's CTE substitution, so a reference
-    * binds exactly where a temp view of that name would resolve: a
-    * WITH definition (case-insensitively) shadows a table of the same
-    * name in the definitions after it and in the WITH's body, a
-    * recursive definition also in itself, and scopes reach into
-    * subquery expressions.
+  /** Bind each table's frame into a parsed query: every single-part,
+    * non-streaming table reference named in `frames` (keys lower-case)
+    * becomes `SubqueryAlias(name, frame)`, so the query runs without a
+    * catalog entry, binding exactly where a temp view of that name
+    * would resolve ([[mapRelations]]).
     */
   def bindTables(plan: LogicalPlan,
-      frames: Map[String, LogicalPlan]): LogicalPlan = {
-    def bind(p: LogicalPlan, shadowed: Set[String]): LogicalPlan = p match {
-      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 &&
-          !r.isStreaming && !shadowed(r.multipartIdentifier.head.toLowerCase) =>
+      frames: Map[String, LogicalPlan]): LogicalPlan =
+    mapRelations(plan) {
+      case (r, false) if r.multipartIdentifier.size == 1 && !r.isStreaming =>
         val name = r.multipartIdentifier.head
         frames.get(name.toLowerCase).fold[LogicalPlan](r)(SubqueryAlias(name, _))
+      case (r, _) => r
+    }
+
+  /** Rebuild a parsed query with `f(relation, isCte)` applied to each
+    * relation it reads, in CTE definitions and subquery expressions
+    * too. `isCte` follows Spark's CTE substitution: a WITH definition
+    * (case-insensitively) shadows a single-part reference of its name
+    * in the definitions after it and in the WITH's body, a recursive
+    * definition also in itself, and scopes reach into subquery
+    * expressions.
+    */
+  private def mapRelations(plan: LogicalPlan)(
+      f: (UnresolvedRelation, Boolean) => LogicalPlan): LogicalPlan = {
+    def go(p: LogicalPlan, shadowed: Set[String]): LogicalPlan = p match {
+      case r: UnresolvedRelation =>
+        f(r, r.multipartIdentifier.size == 1 &&
+          shadowed(r.multipartIdentifier.head.toLowerCase))
       case w: UnresolvedWith =>
         var scope = shadowed
         val defs = w.cteRelations.map { case (name, sub, depth) =>
           val key = name.toLowerCase
           val inner = if (w.allowRecursion) scope + key else scope
           scope += key
-          (name, sub.copy(child = bind(sub.child, inner)), depth)
+          (name, sub.copy(child = go(sub.child, inner)), depth)
         }
-        w.copy(child = bind(w.child, scope), cteRelations = defs)
+        w.copy(child = go(w.child, scope), cteRelations = defs)
       case other =>
-        other.mapChildren(bind(_, shadowed)).transformExpressions {
-          case e: SubqueryExpression => e.withNewPlan(bind(e.plan, shadowed))
+        other.mapChildren(go(_, shadowed)).transformExpressions {
+          case e: SubqueryExpression => e.withNewPlan(go(e.plan, shadowed))
         }
     }
-    bind(plan, Set.empty)
+    go(plan, Set.empty)
   }
 
   /** Expression-level deny list for the untrusted-SQL path. Spark's

@@ -362,8 +362,9 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
         else hwms.toSeq.sortBy(_._1).map { case (s, b) =>
           s"${graft.engine.Sinks.jsonString(s)}:$b"
         }.mkString(""","stream_hwm":{""", ",", "}")
-      // WAL tail repairs at the last startup: data-affecting events
-      // an operator must see without grepping stderr
+      // WAL replay at the last startup: its wall time and frames, and
+      // its tail repairs — data-affecting events an operator must see
+      // without grepping stderr
       val (schemaHits, schemaMisses) = engine.tierSchemaCacheCounts
       val recov = engine.walRecoveries
       val recovJson =
@@ -380,6 +381,8 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
           s""","result_cache_misses":${engine.resultCacheMisses.get}""" +
           s""","tier_schema_cache_hits":$schemaHits""" +
           s""","tier_schema_cache_misses":$schemaMisses""" +
+          s""","wal_replay_ms":${engine.walReplayMs}""" +
+          s""","wal_replayed_records":${engine.walReplayedRecords}""" +
           annDrift + hwmJson + recovJson + "}")
     } catch {
       case e: Exception =>
@@ -632,63 +635,100 @@ object LynxServer {
   */
 object LynxServerMain {
   def main(args: Array[String]): Unit = {
-    val addr = sys.env.getOrElse("LYNX_HTTP_ADDR", "127.0.0.1:3000")
-    val Array(host, port) = addr.split(":", 2)
-    val maxSeg = sys.env.get("LYNX_WAL_MAX_SEGMENT_SIZE")
-      .map(_.toLong).getOrElse(50L * 1024 * 1024)
-    val maxRows = sys.env.get("LYNX_MAX_RESULT_ROWS")
-      .map(_.toInt).getOrElse(Int.MaxValue)
-    val groupCommitMs = sys.env.get("LYNX_WAL_GROUP_COMMIT_MS")
-      .map(_.toLong).getOrElse(0L)
-    val walFsync = sys.env.get("LYNX_WAL_FSYNC").exists(v =>
-      v == "1" || v.equalsIgnoreCase("true"))
-    val walDir = new File(sys.env.getOrElse("LYNX_WAL_DIR", "lynx-wal"))
-    val tierDir = sys.env.get("LYNX_TIER_DIR").map(new File(_))
-    val autoCompact = sys.env.get("LYNX_AUTO_COMPACT_FILES")
-      .map(_.toInt).getOrElse(0)
-    val autoBloom = sys.env.get("LYNX_BLOOM_COLUMNS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+    start(sys.env, () => session())
+    Thread.currentThread().join()
+  }
+
+  /** The server's Spark session. Its status stores keep a fixed, small
+    * history: with Spark's defaults (1000 SQL executions and jobs) a
+    * long-running server's live heap tracks how many queries it ran,
+    * and the server reads no past execution (its UI is off).
+    */
+  def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-lynx")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", "50")
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
       .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val engine = new LynxEngine(spark, walDir, maxSeg,
-      tier = tierDir.map(new graft.tier.ParquetTier(_)),
+    spark
+  }
+
+  /** Start the server `env` configures. WAL replay needs no Spark, so
+    * it runs on a thread of its own while `buildSpark` builds the
+    * session; the engine is then built from the replayed state and the
+    * listener bound. A failed replay fails startup with its own
+    * exception once the session is built, before anything listens.
+    */
+  def start(env: Map[String, String],
+      buildSpark: () => SparkSession): LynxServer = {
+    val addr = env.getOrElse("LYNX_HTTP_ADDR", "127.0.0.1:3000")
+    val Array(host, port) = addr.split(":", 2)
+    val maxSeg = env.get("LYNX_WAL_MAX_SEGMENT_SIZE")
+      .map(_.toLong).getOrElse(50L * 1024 * 1024)
+    val maxRows = env.get("LYNX_MAX_RESULT_ROWS")
+      .map(_.toInt).getOrElse(Int.MaxValue)
+    val groupCommitMs = env.get("LYNX_WAL_GROUP_COMMIT_MS")
+      .map(_.toLong).getOrElse(0L)
+    val walFsync = env.get("LYNX_WAL_FSYNC").exists(v =>
+      v == "1" || v.equalsIgnoreCase("true"))
+    val walDir = new File(env.getOrElse("LYNX_WAL_DIR", "lynx-wal"))
+    val tier = env.get("LYNX_TIER_DIR")
+      .map(d => new graft.tier.ParquetTier(new File(d)))
+    val autoCompact = env.get("LYNX_AUTO_COMPACT_FILES")
+      .map(_.toInt).getOrElse(0)
+    val autoBloom = env.get("LYNX_BLOOM_COLUMNS")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Nil)
+    // operator ack for bounded WAL tail recovery: accept the loss and
+    // truncate at the last proven frame boundary even when the damage
+    // is mid-log or larger than the auto ceiling
+    val forceTailTruncate = env.get("LYNX_WAL_FORCE_TAIL_TRUNCATE")
+      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
+    val recovery =
+      new java.util.concurrent.FutureTask[LynxEngine.Recovered](() =>
+        LynxEngine.recover(walDir, tier, forceTailTruncate))
+    val replayer = new Thread(recovery, "lynx-wal-recovery")
+    replayer.setDaemon(true)
+    replayer.start()
+    val spark = buildSpark()
+    val recovered =
+      try recovery.get()
+      catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      }
+    val engine = new LynxEngine(spark, walDir, maxSeg, tier = tier,
       maxResultRows = maxRows, walGroupCommitMillis = groupCommitMs,
       walFsync = walFsync, autoCompactFileThreshold = autoCompact,
       autoBloomColumns = autoBloom,
-      // operator ack for bounded WAL tail recovery: accept the loss
-      // and truncate at the last proven frame boundary even when the
-      // damage is mid-log or larger than the auto ceiling
-      walForceTailTruncate = sys.env.get("LYNX_WAL_FORCE_TAIL_TRUNCATE")
-        .exists(v => v == "1" || v.equalsIgnoreCase("true")),
       // LYNX_SHARDS (name=url,…) + LYNX_SHARD_SELF (this engine's
       // shard name): with both set, ANN index builds assert this
       // engine is the name's rendezvous owner — a misplaced index
       // fails at creation instead of 404ing at serve time
       annPlacement = for {
-        selfName <- sys.env.get("LYNX_SHARD_SELF")
-        table <- sys.env.get("LYNX_SHARDS")
+        selfName <- env.get("LYNX_SHARD_SELF")
+        table <- env.get("LYNX_SHARDS")
         parsed = table.split(",").toSeq.map(_.trim)
           .filter(_.nonEmpty).map { s =>
             val Array(name, url) = s.split("=", 2)
             (name, url)
           }
         if parsed.nonEmpty
-      } yield (selfName, parsed))
+      } yield (selfName, parsed),
+      recovered = Some(recovered))
     // LYNX_EXCHANGE_DIR: shared-storage handoff root for snapshot
     // export/import (backup/restore + namespace migration); the
     // endpoints are absent without it
     val server = new LynxServer(engine, host, port.toInt,
-      exchangeDir = sys.env.get("LYNX_EXCHANGE_DIR").map(new File(_)))
+      exchangeDir = env.get("LYNX_EXCHANGE_DIR").map(new File(_)))
     server.start()
     println(s"lynx-graft listening on $host:${server.boundPort}")
-    Thread.currentThread().join()
+    server
   }
 }

@@ -1,7 +1,7 @@
 package graft.wal
 
-import java.io.{BufferedInputStream, DataInputStream, DataOutputStream,
-  EOFException, File, FileInputStream, FileOutputStream}
+import java.io.{DataInputStream, DataOutputStream, EOFException, File,
+  FileInputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 
@@ -90,7 +90,9 @@ object WalCodec {
 
   /** Decode one record; None on clean EOF at a record boundary
     * (reference wal.rs:152: EOF on the first length prefix ends the
-    * segment).
+    * segment). The reference decoding for tests: [[Wal.replay]]
+    * decodes the same bytes, with the same failures, from one array
+    * per frame.
     */
   def decode(in: DataInputStream): Option[WriteRequest] = {
     val first = new Array[Byte](8)
@@ -103,8 +105,7 @@ object WalCodec {
     }
     // Chunked read: a corrupt length prefix (bit flip — LYNX2 CRC
     // catches the record, but only AFTER the bytes are consumed) must
-    // hit EOF while reading, not allocate gigabytes up front. Replay-
-    // only path, so the chunking costs nothing at ingest time.
+    // hit EOF while reading, not allocate gigabytes up front.
     def str(len: Int): String = {
       if (len <= (1 << 20)) {
         val b = new Array[Byte](len)
@@ -339,39 +340,180 @@ object Wal {
   /** Segment file name shape, shared by replay and truncation. */
   val SegmentName: scala.util.matching.Regex = """(\d+)\.wal""".r
 
-  /** Counts bytes consumed by the decoder so replay knows the exact
-    * file offset of the last complete record (the buffer reads ahead
-    * below this wrapper, so it must sit between DataInputStream and
-    * BufferedInputStream).
+  /** Bytes a segment is first read through: frames are decoded in
+    * place from this window, which grows only for a single frame larger
+    * than itself (so a frame always sits in one array).
     */
-  private final class CountingInputStream(in: java.io.InputStream)
-      extends java.io.FilterInputStream(in) {
-    var count: Long = 0L
-    override def read(): Int = {
-      val b = super.read(); if (b >= 0) count += 1; b
-    }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val n = super.read(b, off, len); if (n > 0) count += n; n
-    }
-    override def skip(n: Long): Long = {
-      val s = super.skip(n); count += s; s
-    }
-  }
+  private val Window = 1 << 20
 
-  /** Accumulates a CRC32 over every byte the decoder consumes — the
-    * verification side of [[WalCodec.encodeV2]]. Reset per frame; the
-    * expected value is captured BEFORE the stored CRC's own 4 bytes
-    * pass through.
+  /** Reads one segment file through a reusable window and decodes each
+    * frame from that one array: the frame's CRC32 is one `update` over
+    * its payload bytes, and strings decode straight out of the window.
+    * A length reaching past the end of the file is an EOF before any
+    * allocation, whatever the window's size. Namespace, measurement
+    * and tag-key strings are interned for the segment. A frame decodes
+    * to what [[WalCodec.decode]] returns, failing with the same
+    * exception types and messages.
     */
-  private final class Crc32InputStream(in: java.io.InputStream)
-      extends java.io.FilterInputStream(in) {
-    val crc = new java.util.zip.CRC32
-    override def read(): Int = {
-      val b = super.read(); if (b >= 0) crc.update(b); b
+  private final class SegmentReader(file: File)
+      extends java.io.Closeable {
+    private val in = new FileInputStream(file)
+    private val fileLen = in.getChannel.size()
+    private var buf = new Array[Byte](math.min(Window.toLong, fileLen).toInt)
+    private var bufOff = 0L // file offset of buf(0)
+    private var lim = 0 // buf(0 until lim) holds file bytes
+    private var start = 0 // first byte of the frame being decoded
+    private var pos = 0 // next byte to decode
+    private val crc = new java.util.zip.CRC32
+    // open addressing over a 256-slot table kept at most half full
+    private val internBytes = new Array[Array[Byte]](256)
+    private val internStrs = new Array[String](256)
+    private var interned = 0
+
+    /** File offset of the next byte to decode. */
+    def offset: Long = bufOff + pos
+
+    def close(): Unit = in.close()
+
+    /** Make buf(pos until pos + n) hold file bytes, keeping the current
+      * frame's bytes from `start` in the same array.
+      */
+    private def need(n: Int): Unit =
+      if (lim - pos < n) {
+        if (n > fileLen - offset) throw new EOFException
+        val want = (pos - start).toLong + n
+        if (want > Int.MaxValue - 8)
+          throw new IllegalArgumentException(
+            s"frame of $want bytes exceeds the largest array")
+        val dst =
+          if (want <= buf.length) buf
+          else new Array[Byte](
+            math.min(math.max(want, 2L * buf.length), Int.MaxValue - 8L).toInt)
+        if ((dst ne buf) || start > 0)
+          System.arraycopy(buf, start, dst, 0, lim - start)
+        buf = dst
+        bufOff += start; lim -= start; pos -= start; start = 0
+        while (lim - pos < n) {
+          val r = in.read(buf, lim, buf.length - lim)
+          if (r < 0) throw new EOFException
+          lim += r
+        }
+      }
+
+    def header(): Array[Byte] = {
+      need(WalCodec.Header.length)
+      pos += WalCodec.Header.length
+      java.util.Arrays.copyOfRange(buf, pos - WalCodec.Header.length, pos)
     }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val n = super.read(b, off, len); if (n > 0) crc.update(b, off, n)
-      n
+
+    private def bigEndian(n: Int): Long = {
+      need(n)
+      var v = 0L
+      var i = pos
+      while (i < pos + n) { v = (v << 8) | (buf(i) & 0xffL); i += 1 }
+      pos += n
+      v
+    }
+
+    private def long(): Long = bigEndian(8)
+
+    private def len(): Int = {
+      val l = long()
+      require(l >= 0 && l <= Int.MaxValue, s"unreasonable length $l")
+      l.toInt
+    }
+
+    private def str(): String = {
+      val n = len()
+      need(n)
+      pos += n
+      new String(buf, pos - n, n, UTF_8)
+    }
+
+    private def name(): String = {
+      val n = len()
+      need(n)
+      var h = 0
+      var i = pos
+      while (i < pos + n) { h = 31 * h + buf(i); i += 1 }
+      var slot = (h ^ (h >>> 16)) & 255
+      while (internBytes(slot) != null && !java.util.Arrays.equals(
+          internBytes(slot), 0, internBytes(slot).length, buf, pos, pos + n))
+        slot = (slot + 1) & 255
+      val s =
+        if (internBytes(slot) != null) internStrs(slot)
+        else {
+          val s = new String(buf, pos, n, UTF_8)
+          if (interned < 128 && n <= 1024) {
+            internBytes(slot) = java.util.Arrays.copyOfRange(buf, pos, pos + n)
+            internStrs(slot) = s
+            interned += 1
+          }
+          s
+        }
+      pos += n
+      s
+    }
+
+    /** The LYNX1 payload at `pos`, as [[WalCodec.decode]] reads it. */
+    private def payload(): WriteRequest = {
+      val namespace = name()
+      val measurement = name()
+      val value = str()
+      val tagCount = len()
+      val metadata = Map.newBuilder[String, TagValue]
+      var i = 0
+      while (i < tagCount) {
+        need(1)
+        val tpe = buf(pos)
+        pos += 1
+        val key = name()
+        val tag: TagValue = tpe match {
+          case 0 => TagString(str())
+          case 1 => TagNumber(long())
+          case other => throw new IllegalStateException(
+            s"invalid tag value type $other")
+        }
+        metadata += key -> tag
+        i += 1
+      }
+      val timestamp = long()
+      WriteRequest(namespace, measurement, value, metadata.result(),
+        timestamp)
+    }
+
+    /** The next frame, or None at a clean end of file on a frame
+      * boundary. A LYNX2 (`v2`) frame's payload is CRC-verified, and
+      * its decoder failures (a flipped byte read as an impossible
+      * length or tag type) wrap as [[FrameCorruptException]] here,
+      * inside the frame boundary, so recovery can never mistake an
+      * exception of a replay callback for frame corruption.
+      */
+    def frame(v2: Boolean): Option[WriteRequest] = {
+      start = pos
+      val left = fileLen - offset
+      if (left == 0) return None
+      if (left < 8) throw new EOFException("truncated length prefix")
+      val w =
+        try payload()
+        catch {
+          case e @ (_: IllegalArgumentException |
+              _: IllegalStateException) if v2 =>
+            throw new FrameCorruptException(e.getMessage,
+              framingIntact = false)
+        }
+      if (v2) {
+        val payloadLen = pos - start
+        val stored = bigEndian(4)
+        crc.reset()
+        crc.update(buf, start, payloadLen)
+        val expected = crc.getValue
+        if (stored != expected)
+          throw new FrameCorruptException(
+            f"record CRC mismatch (stored $stored%08x, " +
+              f"computed $expected%08x)", framingIntact = true)
+      }
+      Some(w)
     }
   }
 
@@ -385,7 +527,7 @@ object Wal {
     * transient publish failure.
     *
     * `framingIntact`: true only for a CRC mismatch — the decoder
-    * consumed EXACTLY one frame, so the stream sits at the next
+    * consumed EXACTLY one frame, so the reader sits at the next
     * frame boundary and recovery can PROBE whether a CRC-valid
     * frame follows (mid-log bit rot) or nothing does (torn tail).
     * A mis-framed length / invalid tag type loses the framing; no
@@ -410,6 +552,12 @@ object Wal {
     * frame by construction.
     */
   val MaxAutoTruncateBytes: Long = 1L << 20
+
+  /** What a full replay found: the highest segment id, every observed
+    * segment id, and the number of frames it decoded.
+    */
+  final case class Replayed(highest: Long, segments: Seq[Long],
+      records: Long)
 
   /** Plain rows replay inserts per buffer call. */
   private val ReplayRun = 8192
@@ -453,9 +601,11 @@ object Wal {
   def replay(directory: File, buffer: MemBuffer,
       onSeal: WriteRequest => Unit,
       onStreamHwm: (String, Long, String) => Unit)
-      : (Long, Seq[Long]) =
-    replay(directory, buffer, onSeal, onStreamHwm,
+      : (Long, Seq[Long]) = {
+    val r = replay(directory, buffer, onSeal, onStreamHwm,
       forceTailTruncate = false, _ => ())
+    (r.highest, r.segments)
+  }
 
   /** Full replay with the tail-recovery policy knobs.
     *
@@ -474,15 +624,18 @@ object Wal {
     * frame-corrupt truncation, zombie-bracket removal) so the
     * engine can surface them in startup status instead of stderr
     * alone.
+    *
+    * Each segment is read through one reusable window and each frame
+    * decoded from one array ([[SegmentReader]]).
     */
   def replay(directory: File, buffer: MemBuffer,
       onSeal: WriteRequest => Unit,
       onStreamHwm: (String, Long, String) => Unit,
       forceTailTruncate: Boolean,
-      onRecovery: WalRecovery => Unit)
-      : (Long, Seq[Long]) = {
+      onRecovery: WalRecovery => Unit): Replayed = {
     directory.mkdirs()
     var highest = 0L
+    var records = 0L
     val observed = mutable.ArrayBuffer.empty[Long]
     // numeric segment order ("10.wal" after "2.wal") so the buffer
     // sees writes in commit order across rotations; stray non-segment
@@ -534,50 +687,21 @@ object Wal {
     segments.foreach { case (id, f) =>
       observed += id
       highest = math.max(highest, id)
-      val counter = new CountingInputStream(
-        new BufferedInputStream(new FileInputStream(f)))
-      val crcIn = new Crc32InputStream(counter)
-      val in = new DataInputStream(crcIn)
+      val reader = new SegmentReader(f)
       var lastGood = 0L
       var v2 = false
-      // one frame: decode the payload, then (LYNX2) verify its CRC.
-      // Decoder-origin IllegalArgument/IllegalState (a flipped byte
-      // manifesting as an impossible payload) wrap as
-      // FrameCorruptException HERE, inside the frame boundary — the
-      // recovery catch below must never be reachable by exceptions
-      // the replay callbacks throw
-      def decodeFrame(): Option[WriteRequest] = {
-        crcIn.crc.reset()
-        val r =
-          try WalCodec.decode(in)
-          catch {
-            case e @ (_: IllegalArgumentException |
-                _: IllegalStateException) if v2 =>
-              throw new FrameCorruptException(e.getMessage,
-                framingIntact = false)
-          }
-        if (r.isDefined && v2) {
-          val expected = crcIn.crc.getValue
-          val stored = in.readInt().toLong & 0xffffffffL
-          if (stored != expected)
-            throw new FrameCorruptException(
-              f"record CRC mismatch (stored $stored%08x, " +
-                f"computed $expected%08x)", framingIntact = true)
-        }
-        r
-      }
       try {
         try {
-          val header = new Array[Byte](WalCodec.Header.length)
-          in.readFully(header)
+          val header = reader.header()
           v2 = java.util.Arrays.equals(header, WalCodec.Header2)
           if (!v2 && !java.util.Arrays.equals(header, WalCodec.Header))
             throw new IllegalStateException(
               s"segment file must contain header (LYNX1/LYNX2): $f")
           lastGood = WalCodec.Header.length.toLong
-          var rec = decodeFrame()
+          var rec = reader.frame(v2)
           while (rec.isDefined) {
             val w = rec.get
+            records += 1
             if (w.namespace.startsWith("\u0000")) flushPending()
             if (w.namespace == graft.core.StreamBatch.Namespace) {
               val sink = w.measurement
@@ -640,8 +764,8 @@ object Wal {
                 pending += w
                 if (pending.size >= ReplayRun) flushPending()
             }
-            lastGood = counter.count
-            rec = decodeFrame()
+            lastGood = reader.offset
+            rec = reader.frame(v2)
           }
         } catch {
           case e: EOFException if id == lastId =>
@@ -672,7 +796,7 @@ object Wal {
               if id == lastId &&
                 lastGood >= WalCodec.Header.length =>
             val validFrameFollows = e.framingIntact &&
-              (try decodeFrame().isDefined
+              (try reader.frame(v2).isDefined
                catch { case _: Exception => false })
             val discarded = f.length() - lastGood
             if (!forceTailTruncate &&
@@ -702,7 +826,7 @@ object Wal {
                 (if (validFrameFollows) " (forced past mid-log rot)"
                  else "")))
         }
-      } finally in.close()
+      } finally reader.close()
       // Truncate the torn bytes away so the next replay sees a clean
       // boundary; a clean segment ends exactly at lastGood, making
       // this a no-op. A file without even a full header holds no data
@@ -748,6 +872,6 @@ object Wal {
         try raf.setLength(b.beginOff) finally raf.close()
       }
     }
-    (highest, observed.toSeq)
+    Replayed(highest, observed.toSeq, records)
   }
 }

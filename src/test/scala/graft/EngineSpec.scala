@@ -1960,6 +1960,24 @@ class EngineSpec extends AnyFunSuite {
       "FROM r JOIN cpu ON CAST(cpu.value AS INT) = r.n") == Seq(Seq(3L)))
   }
 
+  test("the gate's tables follow CTE scope: a WITH inside a subquery " +
+    "shadows a table of its name there only, in either letter case") {
+    val s = SparkFixture.spark
+    val e = newEngine()
+    (1 to 3).foreach(i =>
+      e.write(WriteRequest("ns", "cpu", i.toString, Map.empty, i.toLong)))
+    Seq("SELECT count(*) AS n, (WITH cpu AS (SELECT 1 AS x) " +
+        "SELECT max(x) FROM cpu) AS m FROM cpu",
+      "SELECT count(*) AS n, (WITH cpu AS (SELECT 1 AS x) " +
+        "SELECT max(x) FROM CPU) AS m FROM cpu").foreach { q =>
+      assert(LynxEngine.referencedTables(s, q) == Seq("cpu"), q)
+      assert(e.query("ns", q).get.rows.map(_.toSeq) == Seq(Seq(3L, 1)), q)
+    }
+    // a query reading only WITH definitions reads no table
+    assert(LynxEngine.referencedTables(s,
+      "WITH Cpu AS (SELECT 1 AS x) SELECT x FROM cpu") == Nil)
+  }
+
   test("live heap stays flat as queries run") {
     val dayUs = 86400L * 1000000L
     val e = newEngine(Some(new ParquetTier(

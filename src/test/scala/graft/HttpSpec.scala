@@ -62,7 +62,10 @@ class HttpSpec extends AnyFunSuite {
         m.contains("\"result_cache_misses\":1") &&
         // no tier on this server: the schema cache is never consulted
         m.contains("\"tier_schema_cache_hits\":0") &&
-        m.contains("\"tier_schema_cache_misses\":0"),
+        m.contains("\"tier_schema_cache_misses\":0") &&
+        // startup replay of an empty WAL directory
+        m.contains("\"wal_replay_ms\":") &&
+        m.contains("\"wal_replayed_records\":0"),
         s"unexpected metrics: $m")
     }
   }
