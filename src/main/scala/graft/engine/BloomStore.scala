@@ -290,105 +290,83 @@ final class BloomStore(spark: SparkSession, tier: ParquetTier,
       mem ++ disk
     }
 
-  /** The subset of `files` a scan for `column = 'value'` must read.
-    * Unindexed files are kept (conservative); a file is dropped only
-    * when its own bloom excludes the literal.
+  /** The subset of `files` a scan must read when every row it keeps
+    * must pass each check in `b` on `column`. Unindexed files are kept
+    * (conservative); a file is dropped only when its own entry proves
+    * that some check fails for every row in it:
+    *  - an `anyOf` list fails when no listed value hits the file's
+    *    bloom, or none falls inside its string zone (an IN keeps a file
+    *    when ANY value could match; a bloom false positive outside
+    *    [min, max] is still provably absent);
+    *  - `str` fails when it and the file's string zone are disjoint,
+    *    compared as UTF-8 bytes (Spark's binary collation). Callers
+    *    widen `>`/`<` to their inclusive forms (boundary file kept);
+    *  - `long` fails when it misses the file's BIGINT zone, min/max of
+    *    EXACTLY the projection a `try_cast(column AS BIGINT)`
+    *    predicate compares (null on uncastable values, so a
+    *    computed-empty zone provably matches no row). Narrower integral
+    *    casts check against it too: any value they accept, BIGINT
+    *    accepts with the same numeric value, so the zone can only be
+    *    wider;
+    *  - `dbl`: the same for `try_cast(column AS DOUBLE)`, ordered as
+    *    Spark orders doubles (NaN greatest, via Double.compare), so
+    *    files holding NaN keep every upper-bound check.
+    * A file whose entry predates numeric zones is read for a numeric
+    * check.
     */
+  def skipFiles(ns: String, table: String, column: String, b: Bounds,
+      files: Seq[String]): Seq[String] = {
+    val anyOf = b.anyOf.map(vs =>
+      (vs.map(positions), vs.map(_.getBytes(UTF_8))))
+    val str = b.str.map(r =>
+      Interval(r.lo.map(_.getBytes(UTF_8)), r.hi.map(_.getBytes(UTF_8))))
+    def within[T](r: Interval[T], zone: Option[(T, T)])(
+        cmp: (T, T) => Int): Boolean = zone.exists { case (mn, mx) =>
+      r.lo.forall(cmp(mx, _) >= 0) && r.hi.forall(cmp(mn, _) <= 0)
+    }
+    filterFiles(ns, table, column, files) { e =>
+      anyOf.forall { case (pss, vbs) =>
+        pss.exists(_.forall(p =>
+          (e.words(p >>> 6) & (1L << (p & 63))) != 0L)) &&
+          e.range.exists { case (lo, hi) =>
+            vbs.exists(v => cmpBytes(v, lo) >= 0 && cmpBytes(v, hi) <= 0)
+          }
+      } &&
+        str.forall(within(_, e.range)(cmpBytes)) &&
+        b.long.forall(r =>
+          e.numZones.forall(z => within(r, z._1)(_ compare _))) &&
+        b.dbl.forall(r =>
+          e.numZones.forall(z => within(r, z._2)(java.lang.Double.compare)))
+    }
+  }
+
+  /** [[skipFiles]] for `column = 'value'`. */
   def skipFiles(ns: String, table: String, column: String,
       value: String, files: Seq[String]): Seq[String] =
-    skipFilesAny(ns, table, column, Seq(value), files)
+    skipFiles(ns, table, column, Bounds(anyOf = Seq(Seq(value))), files)
 
-  /** IN-list variant: the subset of `files` a scan for
-    * `column IN (values…)` must read — a file is kept when ANY listed
-    * value hits its bloom (the disjunction is sound per value: every
-    * value that could match keeps the file).
-    */
+  /** [[skipFiles]] for `column IN (values…)`. */
   def skipFilesAny(ns: String, table: String, column: String,
-      values: Seq[String], files: Seq[String]): Seq[String] = {
-    val pss = values.map(positions)
-    val vbs = values.map(_.getBytes(UTF_8))
-    filterFiles(ns, table, column, files) { e =>
-      val bloomHit = pss.exists(_.forall(p =>
-        (e.words(p >>> 6) & (1L << (p & 63))) != 0L))
-      // equality also consults the zone map: a bloom false
-      // positive outside [lo, hi] is still provably absent
-      val rangeHit = e.range match {
-        case None => false // no non-null values at all
-        case Some((lo, hi)) => vbs.exists(v =>
-          cmpBytes(v, lo) >= 0 && cmpBytes(v, hi) <= 0)
-      }
-      bloomHit && rangeHit
-    }
-  }
+      values: Seq[String], files: Seq[String]): Seq[String] =
+    skipFiles(ns, table, column, Bounds(anyOf = Seq(values)), files)
 
-  /** Range variant: the subset of `files` a scan for
-    * `column >= lo AND column <= hi` (either bound optional) must
-    * read — a file is dropped when its zone map proves the string
-    * interval and the file's [min, max] are disjoint (compared as
-    * UTF-8 bytes, Spark's binary collation). `>`/`<` are treated as
-    * their inclusive forms (boundary file kept: conservative and
-    * sound).
-    */
+  /** [[skipFiles]] for `column >= lo AND column <= hi`. */
   def skipFilesRange(ns: String, table: String, column: String,
       lo: Option[String], hi: Option[String], files: Seq[String])
-      : Seq[String] = {
-    val lob = lo.map(_.getBytes(UTF_8))
-    val hib = hi.map(_.getBytes(UTF_8))
-    filterFiles(ns, table, column, files) { e =>
-      e.range match {
-        case None => false // no non-null values: no row matches
-        case Some((mn, mx)) =>
-          lob.forall(l => cmpBytes(mx, l) >= 0) &&
-            hib.forall(h => cmpBytes(mn, h) <= 0)
-      }
-    }
-  }
+      : Seq[String] =
+    skipFiles(ns, table, column, Bounds(str = Some(Interval(lo, hi))), files)
 
-  /** BIGINT-zone variant: the subset of `files` a scan for
-    * `try_cast(column AS BIGINT) >= lo AND … <= hi` (either bound
-    * optional; equality passes lo == hi) must read. Sound because
-    * the zone records min/max of EXACTLY the projection the
-    * predicate compares (try_cast — null on uncastable, so a file
-    * whose zone is computed-empty provably matches no row). Entries
-    * that predate numeric zones are read conservatively. Narrower
-    * integral casts (try_cast AS INT/SMALLINT/TINYINT) are safely
-    * checked against the BIGINT zone: any value they accept, BIGINT
-    * accepts with the same numeric value (widening is exact), so the
-    * zone can only be wider — never wrongly skipping.
-    */
+  /** [[skipFiles]] for `try_cast(column AS BIGINT)` in [lo, hi]. */
   def skipFilesLongRange(ns: String, table: String, column: String,
       lo: Option[Long], hi: Option[Long], files: Seq[String])
       : Seq[String] =
-    filterFiles(ns, table, column, files) { e =>
-      e.numZones match {
-        case None => true // pre-upgrade entry: must read
-        case Some((lz, _)) => lz match {
-          case None => false // nothing in the file casts to BIGINT
-          case Some((mn, mx)) =>
-            lo.forall(l => mx >= l) && hi.forall(h => mn <= h)
-        }
-      }
-    }
+    skipFiles(ns, table, column, Bounds(long = Some(Interval(lo, hi))), files)
 
-  /** DOUBLE-zone variant — same contract as [[skipFilesLongRange]]
-    * for `try_cast(column AS DOUBLE)` comparisons. Ordering is
-    * Spark's double ordering (NaN greatest), via Double.compare, so
-    * files holding NaN keep every upper-bound check.
-    */
+  /** [[skipFiles]] for `try_cast(column AS DOUBLE)` in [lo, hi]. */
   def skipFilesDoubleRange(ns: String, table: String, column: String,
       lo: Option[Double], hi: Option[Double], files: Seq[String])
       : Seq[String] =
-    filterFiles(ns, table, column, files) { e =>
-      e.numZones match {
-        case None => true
-        case Some((_, dz)) => dz match {
-          case None => false
-          case Some((mn, mx)) =>
-            lo.forall(l => java.lang.Double.compare(mx, l) >= 0) &&
-              hi.forall(h => java.lang.Double.compare(mn, h) <= 0)
-        }
-      }
-    }
+    skipFiles(ns, table, column, Bounds(dbl = Some(Interval(lo, hi))), files)
 
   /** A skip-check in three phases, with ALL jsonl disk IO OUTSIDE
     * the store lock (at the million-file design point a first-touch
@@ -905,6 +883,23 @@ object BloomStore {
       range: Option[(Array[Byte], Array[Byte])],
       numZones: Option[(Option[(Long, Long)],
         Option[(Double, Double)])] = None)
+
+  /** An inclusive interval, either end open. */
+  final case class Interval[T](lo: Option[T], hi: Option[T]) {
+    /** Both intervals at once (AND): the larger low, the smaller high. */
+    def and(o: Interval[T])(implicit ord: Ordering[T]): Interval[T] =
+      Interval((lo ++ o.lo).maxOption, (hi ++ o.hi).minOption)
+  }
+
+  /** What a query requires of one column's values: each `anyOf` list
+    * names the string values one conjunct allows, `str` a string
+    * range, `long`/`dbl` the range of a `try_cast` to BIGINT/DOUBLE.
+    * [[BloomStore.skipFiles]] reads a file unless one check fails.
+    */
+  final case class Bounds(anyOf: Seq[Seq[String]] = Nil,
+      str: Option[Interval[String]] = None,
+      long: Option[Interval[Long]] = None,
+      dbl: Option[Interval[Double]] = None)
 
   val IdxDirName = "_bloomidx"
 

@@ -5,15 +5,20 @@ import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement,
-  LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
+  UnresolvedAttribute, UnresolvedRelation, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast,
+  EqualTo, EvalMode, Expression, GreaterThan, GreaterThanOrEqual, In,
+  LessThan, LessThanOrEqual, Literal, Or, SubqueryExpression,
+  UnresolvedWindowExpression, WindowExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Distinct, Filter, Join,
+  LogicalPlan, Project, Sort, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.types._
 
-import graft.buffer.{BufferScan, MemBuffer, MeasurementsView}
+import graft.buffer.{BufferScan, MemBuffer, MeasurementsView, PartitionKey}
 import graft.core.WriteRequest
+import graft.engine.BloomStore.{Bounds, Interval}
 import graft.tier.ParquetTier
 import graft.wal.Wal
 
@@ -28,10 +33,13 @@ final case class QueryResult(schema: StructType, rows: Seq[Row])
   * buffer" (lynx.rs:32-33) — then buffer insert.
   *
   * Query path (reference lynx.rs:70-148): gatekeeper-parse the SQL,
-  * snapshot the buffered tables it references (chunk references plus
-  * published lengths — no rows are copied under the locks), scan each
+  * harvest what its WHERE clauses prove about each table in one walk
+  * ([[LynxEngine.pruning]]), snapshot the buffered tables it
+  * references (chunk references plus published lengths — no rows are
+  * copied under the locks) and pin their tier versions, scan each
   * snapshot as a DataFrame of chunk-sized input partitions with the
-  * dynamically inferred schema, bind each frame into the parsed plan
+  * dynamically inferred schema, union it with a read of the pinned
+  * tier files its pruning keeps, bind each frame into the parsed plan
   * in place of its table reference ([[LynxEngine.bindTables]]) and run
   * that plan on the engine's one query session — Catalyst plays the
   * role DataFusion plays behind lynx.rs:141, which hands DataFusion one
@@ -55,8 +63,9 @@ final case class QueryResult(schema: StructType, rows: Seq[Row])
   *
   * At scale the buffer tiers to day-partitioned parquet via
   * [[graft.tier.ParquetTier]]; queries union the sealed segments with
-  * the in-RAM tail, and Catalyst prunes `day=` partitions the
-  * reference always scans (SURVEY.md §4.1).
+  * the in-RAM tail and skip the day partitions and the files whose
+  * blooms/zones exclude the predicate, which the reference always
+  * scans (SURVEY.md §4.1).
   */
 class LynxEngine(
     val spark: SparkSession,
@@ -780,6 +789,37 @@ class LynxEngine(
       d.getName -> importSnapshot(namespace, d.getName, d))
   }
 
+  /** Pinned tier files of the referenced tables, and the ones queries
+    * handed to the reader after pruning ([[tierFiles]]).
+    */
+  private[graft] val pruneFilesTotal =
+    new java.util.concurrent.atomic.AtomicLong
+  private[graft] val pruneFilesRead =
+    new java.util.concurrent.atomic.AtomicLong
+
+  /** The files of a table's pinned tier version a query reads: those in
+    * its day range that pass the bloom/zone checks of every constrained
+    * column, one [[BloomStore.skipFiles]] call per column. If nothing
+    * is left, one file is kept so the scan has a path; its rows
+    * provably fail the predicate, which the SQL re-applies. The
+    * frame's columns are the pinned version's, whatever was kept.
+    */
+  private def tierFiles(ns: String, table: String, files: Seq[String],
+      p: LynxEngine.Pruning): Seq[String] = {
+    val inDays = files.filter(ParquetTier.inDays(p.days))
+    val kept = valueBlooms match {
+      case Some(bs) if p.columns.nonEmpty && bs.hasAnyIndex =>
+        p.columns.foldLeft(inDays) { case (fs, (c, b)) =>
+          bs.skipFiles(ns, table, c, b, fs)
+        }
+      case _ => inDays
+    }
+    val read = if (kept.nonEmpty) kept else files.take(1)
+    pruneFilesTotal.addAndGet(files.size)
+    pruneFilesRead.addAndGet(read.size)
+    read
+  }
+
   /** Run `sql` against namespace `namespace`. None = unknown
     * namespace/table → HTTP 404 (reference lynx.rs:144-148).
     *
@@ -811,36 +851,10 @@ class LynxEngine(
       throw new IllegalArgumentException(
         s"function not allowed: ${banned.head}")
     val tables = LynxEngine.referencedTables(plan)
-    // day-partition pruning: derive per-table UTC-day bounds from the
-    // WHERE clause and read only matching day= directories of each
-    // table's tier (the pruning the reference lacks, SURVEY.md §4.1).
-    // Single-table queries use the richer single-relation analysis
-    // (Project pass-through); joins prune each side independently.
-    val dayBoundsByTable: Map[String, (String, String)] =
-      if (tables.size == 1)
-        LynxEngine.dayBounds(plan) match {
-          case Some(b) => Map(tables.head.toLowerCase -> b)
-          case None => Map.empty
-        }
-      else LynxEngine.dayBoundsPerTable(plan)
-    // string-equality literals per table: feeds BloomStore file
-    // skipping when an index exists for the (table, column)
-    val bloomsActive =
-      tier.isDefined && valueBlooms.exists(_.hasAnyIndex)
-    val eqByTable: Map[String, Seq[(String, Seq[String])]] =
-      if (bloomsActive) LynxEngine.eqLiteralsPerTable(plan) else Map.empty
-    // string-range bounds per table: feeds the zone-map half of the
-    // same per-file index
-    val rangesByTable
-        : Map[String, Seq[(String, Option[String], Option[String])]] =
-      if (bloomsActive) LynxEngine.strRangesPerTable(plan) else Map.empty
-    // typed numeric zone bounds (try_cast comparisons only — see
-    // numRangesPerTable's soundness note)
-    val (longRangesByTable, dblRangesByTable) =
-      if (bloomsActive) LynxEngine.numRangesPerTable(plan)
-      else (Map.empty[String,
-        Seq[(String, Option[Long], Option[Long])]],
-        Map.empty[String, Seq[(String, Option[Double], Option[Double])]])
+    // what the WHERE clauses prove about each table, in one walk:
+    // the day range and the bloom/zone checks its tier files must pass
+    // (the pruning the reference lacks, SURVEY.md §4.1)
+    val pruning = LynxEngine.pruning(plan)
     // as-of reads bypass the cache: they are rare ops reads over
     // immutable manifests, not worth a key-shape extension
     val cacheable = resultCacheEntries > 0 && !isExplain &&
@@ -964,38 +978,9 @@ class LynxEngine(
           inMem.get(t).map(LynxEngine.toDataFrame(querySession, _))
         val sealedDf: Option[DataFrame] =
           tierSnaps.get(t).filter(_.files.nonEmpty).flatMap { snap =>
-            // bloom file skipping: drop manifest files whose value
-            // blooms exclude every harvested `col = 'literal'`
-            // conjunct for this table. If everything is skipped, keep
-            // one file so the scan has a path — its rows provably fail
-            // the predicate and the SQL filter removes them (the
-            // ParquetTier.readFiles day-prune convention). The frame's
-            // columns are the pinned version's, whatever was kept.
-            val bloomed = valueBlooms match {
-              case Some(bs) =>
-                val afterEq = eqByTable.getOrElse(t.toLowerCase, Nil)
-                  .foldLeft(snap.files) { case (fs, (c, vs)) =>
-                    bs.skipFilesAny(namespace, t, c, vs, fs)
-                  }
-                val afterStr = rangesByTable.getOrElse(t.toLowerCase, Nil)
-                  .foldLeft(afterEq) { case (fs, (c, lo, hi)) =>
-                    bs.skipFilesRange(namespace, t, c, lo, hi, fs)
-                  }
-                val afterLong = longRangesByTable
-                  .getOrElse(t.toLowerCase, Nil)
-                  .foldLeft(afterStr) { case (fs, (c, lo, hi)) =>
-                    bs.skipFilesLongRange(namespace, t, c, lo, hi, fs)
-                  }
-                dblRangesByTable.getOrElse(t.toLowerCase, Nil)
-                  .foldLeft(afterLong) { case (fs, (c, lo, hi)) =>
-                    bs.skipFilesDoubleRange(namespace, t, c, lo, hi, fs)
-                  }
-              case None => snap.files
-            }
-            val toRead =
-              if (bloomed.nonEmpty) bloomed else snap.files.take(1)
-            tier.map(_.readPinned(querySession, snap, toRead,
-              dayBoundsByTable.get(t.toLowerCase)))
+            val p = pruning.getOrElse(t.toLowerCase, LynxEngine.Pruning())
+            tier.map(_.readPinned(querySession, snap,
+              tierFiles(namespace, t, snap.files, p), p.days))
           }
         val df = (mem, sealedDf) match {
           case (Some(m), Some(sd)) =>
@@ -1141,9 +1126,6 @@ object LynxEngine {
         s"failed to parse query: ${e.getMessage}")
     }
 
-  def referencedTables(spark: SparkSession, sql: String): Seq[String] =
-    referencedTables(parse(spark, sql))
-
   def referencedTables(plan: LogicalPlan): Seq[String] = {
     // Reject anything that is not a pure query. The Command trait
     // covers DDL including CREATE TABLE ... AS SELECT (which contains
@@ -1154,7 +1136,6 @@ object LynxEngine {
         case _: org.apache.spark.sql.catalyst.plans.logical.Command => true
         case _: org.apache.spark.sql.catalyst.plans.logical.ParsedStatement
           => true
-        case _: InsertIntoStatement => true
         case _ => false
       })
       throw new IllegalArgumentException(
@@ -1303,11 +1284,11 @@ object LynxEngine {
     fromPlan(plan).distinct
   }
 
-  /** Inline (non-recursive) WITH definitions so a CTE-wrapped
-    * time-range query still exposes its Filter-over-scan shape to
-    * [[dayBounds]]. Later CTEs may reference earlier ones; a CTE
-    * name shadows an engine table within the substituted scope,
-    * which matches SQL resolution order.
+  /** Inline (non-recursive) WITH definitions so a CTE-wrapped query
+    * still exposes its Filter-over-scan shape to [[pruning]]. Later
+    * CTEs may reference earlier ones; a CTE name shadows an engine
+    * table within the substituted scope, which matches SQL resolution
+    * order.
     */
   private def inlineCtes(plan: LogicalPlan): LogicalPlan = {
     def substitute(p: LogicalPlan,
@@ -1328,591 +1309,348 @@ object LynxEngine {
     }
   }
 
-  /** Conservative UTC-day bounds for tier partition pruning: applies
-    * ONLY to a single-relation query (after CTE inlining) with no
-    * subquery expressions. Bounds come from the conjuncts of every
-    * Filter whose path down to the scan provably preserves the raw
-    * `timestamp` column (aliases, other Filters, Distinct, Sort,
-    * and Projects that pass `timestamp` through unrenamed) —
-    * so `WITH t AS (... WHERE timestamp >= X) SELECT ... FROM t`
-    * and filters split across a derived table still prune. Returns
-    * inclusive (loDay, hiDay); a bound that can't be derived falls
-    * back to the open range. Never over-prunes: the SQL re-applies
-    * the full predicate after the day filter, and any shape this
-    * analysis can't prove is left unpruned.
+  /** What a query's WHERE clauses prove about the rows it uses of one
+    * table: the range of its `timestamp` (`time`, micros, bounds
+    * inclusive) and, per lower-cased column, the checks a tier file
+    * must pass to be read ([[BloomStore.skipFiles]]).
     */
-  def dayBounds(rawPlan: LogicalPlan): Option[(String, String)] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical
-    import org.apache.spark.sql.types.{StringType, TimestampType}
-    val plan = inlineCtes(rawPlan)
-    val simple =
-      plan.collect { case r: UnresolvedRelation => r }.size == 1 &&
-      !plan.exists(_.expressions.exists(_.exists(
-        _.isInstanceOf[SubqueryExpression])))
-    if (!simple) return None
-    // `timestamp` below this node is still the scan's raw column iff
-    // every node on the path to the relation passes it through
-    // untransformed and nothing else is renamed to `timestamp`
-    def isTsName(s: String): Boolean = s.equalsIgnoreCase("timestamp")
-    def preservesTs(p: LogicalPlan): Boolean = p match {
-      case _: UnresolvedRelation => true
-      case a: logical.SubqueryAlias => preservesTs(a.child)
-      case f: logical.Filter => preservesTs(f.child)
-      // NOT Limit: a filter above a LIMIT can't push below it —
-      // pruning the scan would change which rows the limit keeps.
-      // Distinct/Sort commute with a row-level predicate, so rows a
-      // pruned scan drops are exactly rows the filter drops anyway.
-      case d: logical.Distinct => preservesTs(d.child)
-      case s: logical.Sort => preservesTs(s.child)
-      case pr: logical.Project =>
-        val passesThrough = pr.projectList.exists {
-          case _: org.apache.spark.sql.catalyst.analysis.UnresolvedStar =>
-            true
-          case a: org.apache.spark.sql.catalyst.analysis
-              .UnresolvedAttribute => isTsName(a.nameParts.last)
-          case Alias(c: org.apache.spark.sql.catalyst.analysis
-              .UnresolvedAttribute, name) =>
-            isTsName(name) && isTsName(c.nameParts.last)
-          case _ => false
-        }
-        val renamesOther = pr.projectList.exists {
-          case Alias(c, name) if isTsName(name) => c match {
-            case u: org.apache.spark.sql.catalyst.analysis
-                .UnresolvedAttribute => !isTsName(u.nameParts.last)
-            case _ => true
-          }
-          case _ => false
-        }
-        passesThrough && !renamesOther && preservesTs(pr.child)
-      case _ => false
-    }
-    val scanFilters = plan.collect {
-      case f: logical.Filter if preservesTs(f.child) => f.condition
-    }
-    if (scanFilters.isEmpty) return None
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    def isTs(e: Expression): Boolean = e match {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        a.nameParts.last.equalsIgnoreCase("timestamp")
-      case Cast(c, _, _, _) => isTs(c)
-      case _ => false
-    }
-    def micros(e: Expression): Option[Long] = e match {
-      case Literal(v: Long, TimestampType) => Some(v)
-      case Literal(s, StringType) =>
-        val str = String.valueOf(s)
-        val full = if (str.length == 10) str + " 00:00:00" else str
-        try Some(java.time.LocalDateTime.parse(full.replace(' ', 'T'))
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
-        catch { case _: Exception => None }
-      case Cast(c, _, _, _) => micros(c)
-      case _ => None
-    }
-    var lo: Option[Long] = None
-    var hi: Option[Long] = None
-    def tighten(b: Option[Long], v: Long, isLo: Boolean): Option[Long] =
-      Some(b.fold(v)(prev => if (isLo) math.max(prev, v)
-        else math.min(prev, v)))
-    scanFilters.flatMap(conjuncts).foreach {
-      case GreaterThanOrEqual(a, l) if isTs(a) =>
-        micros(l).foreach(v => lo = tighten(lo, v, isLo = true))
-      case GreaterThan(a, l) if isTs(a) =>
-        micros(l).foreach(v => lo = tighten(lo, v, isLo = true))
-      case LessThanOrEqual(a, l) if isTs(a) =>
-        micros(l).foreach(v => hi = tighten(hi, v, isLo = false))
-      case LessThan(a, l) if isTs(a) =>
-        micros(l).foreach(v => hi = tighten(hi, v, isLo = false))
-      case EqualTo(a, l) if isTs(a) =>
-        micros(l).foreach { v =>
-          lo = tighten(lo, v, isLo = true)
-          hi = tighten(hi, v, isLo = false)
-        }
-      // literal-first orientation
-      case GreaterThanOrEqual(l, a) if isTs(a) =>
-        micros(l).foreach(v => hi = tighten(hi, v, isLo = false))
-      case GreaterThan(l, a) if isTs(a) =>
-        micros(l).foreach(v => hi = tighten(hi, v, isLo = false))
-      case LessThanOrEqual(l, a) if isTs(a) =>
-        micros(l).foreach(v => lo = tighten(lo, v, isLo = true))
-      case LessThan(l, a) if isTs(a) =>
-        micros(l).foreach(v => lo = tighten(lo, v, isLo = true))
-      case _ =>
-    }
-    if (lo.isEmpty && hi.isEmpty) None
-    else Some((
-      lo.map(graft.buffer.PartitionKey.fromMicros).getOrElse("0000-01-01"),
-      hi.map(graft.buffer.PartitionKey.fromMicros).getOrElse("9999-12-31")))
+  final case class Pruning(time: Option[Interval[Long]] = None,
+      columns: Map[String, Bounds] = Map.empty) {
+    /** `time` as inclusive UTC days, an open end as the extreme day. */
+    def days: Option[(String, String)] = time.map(r => (
+      r.lo.fold("0000-01-01")(PartitionKey.fromMicros),
+      r.hi.fold("9999-12-31")(PartitionKey.fromMicros)))
   }
 
-  /** Shared conservative Filter-conjunct walk behind the per-table
-    * pruning harvests ([[dayBoundsPerTable]], [[eqLiteralsPerTable]],
-    * [[strRangesPerTable]]) — ONE copy of the soundness-critical
-    * attribution logic. For every Filter of the CTE-inlined plan it
-    * invokes `visit(conjunct, resolveParts)`, where `resolveParts`
-    * maps an attribute's lowercased name parts to (table, column)
-    * only when the attribute provably reads that table's raw scan
-    * column:
-    *  - unqualified name: only when the Filter's subtree holds
-    *    exactly one base relation reachable through row-preserving
-    *    nodes (a derived table's inner WHERE, after CTE inlining);
-    *  - qualified `a.col`: when binding `a` resolves to exactly one
-    *    relation reachable from the Filter through row-preserving
-    *    nodes only — Join, Filter, Sort, Distinct, and SubqueryAlias
-    *    directly over a relation. NOT Project / Aggregate / Window /
-    *    Generate / Limit: their outputs may not be the scan column,
-    *    or their row sets are cardinality-sensitive (the
-    *    [[dayBounds]] Limit rule).
-    *
-    * Join ON conditions are never harvested: an outer join's ON
-    * predicate on the PRESERVED side must not drop scan rows (the
-    * row survives null-extended). Filter conjuncts above any join
-    * type are safe as long as the caller harvests only
-    * null-rejecting predicates — a null-extended row fails the
-    * post-join predicate exactly like the pruned scan row would.
-    *
-    * Returns None when the plan is gated (any subquery expression —
-    * correlation could smuggle outer references past the walk);
-    * otherwise the per-table relation reference counts. Callers MUST
-    * drop tables referenced more than once (self-joins, UNION arms:
-    * all references share one registered view, so per-reference
-    * predicates could over-prune the shared scan).
+  /** One output column of a plan node, as [[pruning]] names it. */
+  private sealed trait Out
+  /** Every column of a table, each under its own name. */
+  private final case class Scan(quals: Set[String], table: String)
+      extends Out
+  /** One column; `raw` = (table, column) when it is a scan column. */
+  private final case class Named(quals: Set[String], name: String,
+      raw: Option[(String, String)]) extends Out
+  /** Columns the walk cannot see: any name, and any qualifier when
+    * `quals` is None.
     */
-  private def harvestConjuncts(rawPlan: LogicalPlan)(
-      visit: (org.apache.spark.sql.catalyst.expressions.Expression,
-        Seq[String] => Option[(String, String)]) => Unit)
-      : Option[Map[String, Int]] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical
-    val plan = inlineCtes(rawPlan)
-    if (plan.exists(_.expressions.exists(_.exists(
-        _.isInstanceOf[SubqueryExpression])))) return None
-    def relName(r: UnresolvedRelation): Option[String] =
-      if (r.multipartIdentifier.size == 1)
-        Some(r.multipartIdentifier.head.toLowerCase)
-      else None
-    // (binding → table) pairs reachable from p through row-preserving
-    // nodes only; anything else ends the walk (conservative)
-    def safeRels(p: LogicalPlan): Seq[(String, String)] = p match {
-      case r: UnresolvedRelation =>
-        relName(r).map(n => n -> n).toSeq
-      case sa: logical.SubqueryAlias => sa.child match {
-        case r: UnresolvedRelation =>
-          relName(r).map(n => sa.alias.toLowerCase -> n).toSeq
-        case _ => Nil // derived table: its inner Filters prune themselves
+  private final case class Opaque(quals: Option[Set[String]]) extends Out
+
+  private def answers(o: Out, qual: Option[String]): Boolean = o match {
+    case Scan(qs, _) => qual.forall(qs)
+    case Named(qs, _, _) => qual.forall(qs)
+    case Opaque(qs) => qual.forall(q => qs.forall(_(q)))
+  }
+
+  /** The (table, column) a column reference denotes among `outs`: only
+    * when exactly one output answers to it and that one is a scan
+    * column. So an unqualified name over two relations, or over
+    * anything the walk cannot see, denotes nothing.
+    */
+  private def resolve(outs: Seq[Out],
+      parts: Seq[String]): Option[(String, String)] = {
+    val (qual, name) = parts.map(_.toLowerCase) match {
+      case Seq(n) => (None, n)
+      case Seq(q, n) => (Some(q), n)
+      case _ => return None
+    }
+    outs.filter {
+      case o @ Named(_, n, _) => n == name && answers(o, qual)
+      case o => answers(o, qual)
+    } match {
+      case Seq(Scan(_, t)) => Some((t, name))
+      case Seq(Named(_, _, raw)) => raw
+      case _ => None
+    }
+  }
+
+  /** A node's outputs, following each table's scan columns up through
+    * row-preserving nodes only: each row they output is one input row
+    * (or, above an outer join, one null-extended), so a null-rejecting
+    * predicate on a scan column drops above them exactly the rows a
+    * pruned scan drops below. A SubqueryAlias re-qualifies, and a
+    * Project passes, renames or computes each column. Every other node
+    * is a barrier whose columns are [[Opaque]]: LIMIT is one (a pruned
+    * scan would change which rows the limit keeps), as are aggregates,
+    * windows, generators, set operations, samples and column-alias
+    * lists.
+    */
+  private def outputs(p: LogicalPlan): Seq[Out] = p match {
+    case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+      val t = r.multipartIdentifier.head.toLowerCase
+      Seq(Scan(Set(t), t))
+    case a: SubqueryAlias =>
+      val q = Set(a.alias.toLowerCase)
+      outputs(a.child).map {
+        case Scan(_, t) => Scan(q, t)
+        case Named(_, n, raw) => Named(q, n, raw)
+        case Opaque(_) => Opaque(Some(q))
       }
-      case j: logical.Join => safeRels(j.left) ++ safeRels(j.right)
-      case f: logical.Filter => safeRels(f.child)
-      case s: logical.Sort => safeRels(s.child)
-      case d: logical.Distinct => safeRels(d.child)
-      case _ => Nil
-    }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
+    case f: Filter => outputs(f.child)
+    case s: Sort => outputs(s.child)
+    case d: Distinct => outputs(d.child)
+    case j: Join => outputs(j.left) ++ outputs(j.right)
+    case pr: Project if !pr.projectList.exists(windowed) =>
+      val in = outputs(pr.child)
+      pr.projectList.flatMap {
+        case UnresolvedStar(None) => in
+        case UnresolvedStar(Some(Seq(q))) =>
+          in.filter(answers(_, Some(q.toLowerCase)))
+        case a: UnresolvedAttribute => Seq(Named(Set.empty,
+          a.nameParts.last.toLowerCase, resolve(in, a.nameParts)))
+        case Alias(a: UnresolvedAttribute, n) =>
+          Seq(Named(Set.empty, n.toLowerCase, resolve(in, a.nameParts)))
+        case Alias(_, n) => Seq(Named(Set.empty, n.toLowerCase, None))
+        // an unaliased CAST takes its column's name, not its values
+        case UnresolvedAlias(Cast(a: UnresolvedAttribute, _, _, _), _) =>
+          Seq(Named(Set.empty, a.nameParts.last.toLowerCase, None))
+        // any other unaliased expression gets a generated name
+        case _ => Seq(Opaque(None))
+      }
+    case _ => Seq(Opaque(None))
+  }
+
+  /** The one predicate harvest behind tier file skipping: per table,
+    * what the conjuncts of the query's Filters prove ([[Pruning]]).
+    * CTEs are inlined first. A Filter's column references are
+    * resolved against its child's [[outputs]], so the harvest follows
+    * qualified names through joins, and any name through derived
+    * tables, CTEs and projections that pass or rename a scan column.
+    * Never over-prunes: the SQL re-applies the full predicate after
+    * the skip, and any shape this walk cannot prove is left unpruned.
+    * Day bounds come from `timestamp` comparisons under any CAST with
+    * a TIMESTAMP or parsable string literal (or a CAST of one); the
+    * string checks from `=`, IN, OR-of-equalities on one column and
+    * ranges with string literals; numeric zones from `try_cast`
+    * ranges. `>`/`<` widen to their inclusive forms (the boundary is
+    * kept), and bounds on one column intersect, matching AND.
+    */
+  def pruning(rawPlan: LogicalPlan): Map[String, Pruning] = {
+    val plan = inlineCtes(rawPlan)
+    // a subquery expression could carry outer references past the
+    // walk, and a recursive WITH (never inlined) derives the rows it
+    // reads from its own output
+    if (plan.exists(p => p.isInstanceOf[UnresolvedWith] ||
+        p.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression]))))
+      return Map.empty
+    // Self-joins and UNION arms are not pruned: each name binds one
+    // frame (bindTables), so every reference of a table read twice
+    // shares one file list, and a predicate on one reference could
+    // drop rows another reads.
+    val acc = scala.collection.mutable.Map.empty[String, Pruning] ++=
+      plan.collect { case r: UnresolvedRelation => r.multipartIdentifier }
+        .collect { case Seq(t) => t.toLowerCase }
+        .groupBy(identity).collect { case (t, Seq(_)) => t -> Pruning() }
+    def narrow(t: String, c: String)(f: Bounds => Bounds): Unit =
+      acc.get(t).foreach(p => acc(t) = p.copy(columns =
+        p.columns.updated(c, f(p.columns.getOrElse(c, Bounds())))))
+    def and[T: Ordering](r: Option[Interval[T]], lo: Option[T],
+        hi: Option[T]): Option[Interval[T]] =
+      Some(r.fold(Interval(lo, hi))(_.and(Interval(lo, hi))))
+    // ON clauses are never harvested (only Filters are walked): an
+    // outer join's ON predicate on its preserved side must not drop
+    // scan rows, which survive it null-extended. Every shape harvested
+    // is null-rejecting, which keeps Filter conjuncts above any join
+    // sound: a null-extended row fails the predicate exactly as the
+    // pruned scan row would.
     plan.foreach {
-      case f: logical.Filter =>
-        val rels = safeRels(f.child)
-        val nRels = f.child.collect {
-          case r: UnresolvedRelation => r }.size
-        def resolveParts(parts: Seq[String])
-            : Option[(String, String)] = {
-          val colName = parts.last
-          if (parts.size == 1)
-            // unqualified: unambiguous only with ONE relation below
-            if (nRels == 1 && rels.size == 1)
-              Some(rels.head._2 -> colName)
-            else None
-          else if (parts.size == 2) {
-            val hits = rels.filter(_._1 == parts.head)
-            if (hits.size == 1) Some(hits.head._2 -> colName)
-            else None
-          } else None
+      case f: Filter =>
+        val outs = outputs(f.child)
+        def col(e: Expression): Option[(String, String)] = e match {
+          case a: UnresolvedAttribute => resolve(outs, a.nameParts)
+          case _ => None
         }
-        conjuncts(f.condition).foreach(c => visit(c, resolveParts))
-      case _ =>
-    }
-    Some(plan.collect {
-      case r: UnresolvedRelation => relName(r) }
-      .flatten.groupBy(identity).view.mapValues(_.size).toMap)
-  }
-
-  /** Lowercased name parts of a bare column attribute. No Cast
-    * unwrap: the bloom/zone index hashed and bounded the column's
-    * RAW string form, and a cast changes what the predicate compares.
-    */
-  private def colParts(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[Seq[String]] = e match {
-    case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-      Some(a.nameParts.map(_.toLowerCase))
-    case _ => None
-  }
-
-  /** A plain non-null string literal. Typed comparisons (`value = 3`)
-    * never qualify: type coercion can match rows whose string form
-    * differs from the literal, so pruning on them would be unsound.
-    */
-  private def strLit(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[String] = e match {
-    case org.apache.spark.sql.catalyst.expressions
-      .Literal(s, StringType) if s != null => Some(String.valueOf(s))
-    case _ => None
-  }
-
-  /** PER-TABLE conservative day bounds — [[dayBounds]] extended past
-    * single-relation queries: without it a join query scans ALL day
-    * partitions of EVERY table however tight its per-table timestamp
-    * predicates, and multi-table queries are exactly where full-tier
-    * scans hurt most (fact-to-fact joins over years of days).
-    * Attribution, ON-clause, and shared-view rules all live in
-    * [[harvestConjuncts]]; this visitor only recognizes the
-    * timestamp comparison shapes (all null-rejecting).
-    */
-  def dayBoundsPerTable(rawPlan: LogicalPlan)
-      : Map[String, (String, String)] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def tsParts(e: Expression): Option[Seq[String]] = e match {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-          if a.nameParts.last.equalsIgnoreCase("timestamp") =>
-        Some(a.nameParts.map(_.toLowerCase))
-      case Cast(c, _, _, _) => tsParts(c)
-      case _ => None
-    }
-    def micros(e: Expression): Option[Long] = e match {
-      case Literal(v: Long, TimestampType) => Some(v)
-      case Literal(s, StringType) =>
-        val str = String.valueOf(s)
-        val full = if (str.length == 10) str + " 00:00:00" else str
-        try Some(java.time.LocalDateTime.parse(full.replace(' ', 'T'))
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
-        catch { case _: Exception => None }
-      case Cast(c, _, _, _) => micros(c)
-      case _ => None
-    }
-    val lo = scala.collection.mutable.Map.empty[String, Long]
-    val hi = scala.collection.mutable.Map.empty[String, Long]
-    def tighten(m: scala.collection.mutable.Map[String, Long],
-        t: String, v: Long, isLo: Boolean): Unit =
-      m(t) = m.get(t).fold(v)(prev =>
-        if (isLo) math.max(prev, v) else math.min(prev, v))
-    val refCounts = harvestConjuncts(rawPlan) { (c, resolveParts) =>
-      def resolve(e: Expression): Option[String] =
-        tsParts(e).flatMap(resolveParts).map(_._1)
-      c match {
-        case GreaterThanOrEqual(a, l) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(lo, t, v, isLo = true)
-        case GreaterThan(a, l) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(lo, t, v, isLo = true)
-        case LessThanOrEqual(a, l) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(hi, t, v, isLo = false)
-        case LessThan(a, l) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(hi, t, v, isLo = false)
-        case EqualTo(a, l) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l)) {
-            tighten(lo, t, v, isLo = true)
-            tighten(hi, t, v, isLo = false)
+        // `timestamp` is the one column that is not a string: a string
+        // literal compared with it is cast to a timestamp, so it feeds
+        // the day range, never the string checks
+        def strCol(e: Expression) = col(e).filter(_._2 != "timestamp")
+        def equality(e: Expression) = e match {
+          case EqualTo(x, y) =>
+            (for (k <- strCol(x); v <- strLit(y)) yield (k, Seq(v)))
+              .orElse(for (k <- strCol(y); v <- strLit(x)) yield (k, Seq(v)))
+          // all-or-nothing: one non-string element voids the IN
+          case In(x, vs) if vs.nonEmpty && vs.forall(strLit(_).isDefined) =>
+            strCol(x).map(_ -> vs.flatMap(strLit))
+          case _ => None
+        }
+        conjuncts(f.condition).foreach { c =>
+          // an OR of equalities on ONE column harvests as the IN it is:
+          // a file excluded for every listed value satisfies no
+          // disjunct. Any other disjunct voids the whole OR.
+          val eqs = disjuncts(c).map(equality)
+          if (eqs.forall(_.isDefined) &&
+              eqs.flatten.map(_._1).toSet.size == 1) {
+            val (t, cn) = eqs.head.get._1
+            val vs = eqs.flatten.flatMap(_._2).distinct
+            narrow(t, cn)(b => b.copy(anyOf = (b.anyOf :+ vs).distinct))
           }
-        // literal-first orientation flips the bound direction
-        case GreaterThanOrEqual(l, a) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(hi, t, v, isLo = false)
-        case GreaterThan(l, a) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(hi, t, v, isLo = false)
-        case LessThanOrEqual(l, a) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(lo, t, v, isLo = true)
-        case LessThan(l, a) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l))
-            tighten(lo, t, v, isLo = true)
-        case EqualTo(l, a) if resolve(a).isDefined =>
-          for (t <- resolve(a); v <- micros(l)) {
-            tighten(lo, t, v, isLo = true)
-            tighten(hi, t, v, isLo = false)
-          }
-        case _ =>
-      }
-    }
-    refCounts match {
-      case None => Map.empty
-      case Some(rc) =>
-        (lo.keySet ++ hi.keySet).iterator
-          .filter(t => rc.getOrElse(t, 0) == 1)
-          .map { t =>
-            t -> ((
-              lo.get(t).map(graft.buffer.PartitionKey.fromMicros)
-                .getOrElse("0000-01-01"),
-              hi.get(t).map(graft.buffer.PartitionKey.fromMicros)
-                .getOrElse("9999-12-31")))
-          }.toMap
-    }
-  }
-
-  /** Per-table string-equality/IN literals from WHERE conjuncts —
-    * `host = 'web-17'` → ("events" → Seq(("host", Seq("web-17")))),
-    * `host IN ('a','b')` → ("events" → Seq(("host", Seq("a","b"))))
-    * — the predicate harvest behind [[BloomStore]] file skipping
-    * (an IN keeps a file when ANY listed value hits its bloom).
-    * Attribution and gating rules live in [[harvestConjuncts]];
-    * EqualTo/In are null-rejecting, so Filter conjuncts above outer
-    * joins remain safe. Only plain string literals qualify — the
-    * blooms hash the column's STRING cast, and a typed comparison
-    * (`value = 3`) may match rows whose string form differs; an IN
-    * with even one non-string element is dropped whole.
-    *
-    * A conjunct that is an OR of equalities/INs on ONE column —
-    * `host = 'a' OR host = 'b'` — harvests as the IN it is
-    * semantically (every disjunct is null-rejecting, and a file
-    * excluded for all listed values can satisfy no disjunct); a
-    * disjunct on a different column, or any non-equality disjunct,
-    * voids the whole OR.
-    */
-  def eqLiteralsPerTable(rawPlan: LogicalPlan)
-      : Map[String, Seq[(String, Seq[String])]] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val out = scala.collection.mutable
-      .Map.empty[String, Vector[(String, Seq[String])]]
-    val refCounts = harvestConjuncts(rawPlan) { (c, resolveParts) =>
-      def resolve(e: Expression): Option[(String, String)] =
-        colParts(e).flatMap(resolveParts)
-      def add(t: String, col: String, vs: Seq[String]): Unit =
-        out(t) = out.getOrElse(t, Vector.empty) :+ (col -> vs)
-      // (table, column, values) of one equality-shaped expression
-      def eqShape(e: Expression)
-          : Option[((String, String), Seq[String])] = e match {
-        case EqualTo(x, y) =>
-          (for (tc <- resolve(x); v <- strLit(y)) yield (tc, Seq(v)))
-            .orElse(
-              for (tc <- resolve(y); v <- strLit(x)) yield (tc, Seq(v)))
-        case In(x, list) if list.nonEmpty =>
-          // all-or-nothing: one non-string element voids the harvest
-          val lits = list.map(strLit)
-          if (lits.forall(_.isDefined))
-            resolve(x).map(tc => (tc, lits.flatten))
-          else None
-        case _ => None
-      }
-      def disjuncts(e: Expression): Seq[Expression] = e match {
-        case Or(l, r) => disjuncts(l) ++ disjuncts(r)
-        case other => Seq(other)
-      }
-      c match {
-        case o: Or =>
-          val shapes = disjuncts(o).map(eqShape)
-          if (shapes.forall(_.isDefined)) {
-            val ps = shapes.flatten
-            val tcs = ps.map(_._1).distinct
-            if (tcs.size == 1)
-              add(tcs.head._1, tcs.head._2,
-                ps.flatMap(_._2).distinct)
-          }
-        case other =>
-          eqShape(other).foreach { case ((t, col), vs) =>
-            add(t, col, vs)
-          }
-      }
-    }
-    refCounts match {
-      case None => Map.empty
-      case Some(rc) =>
-        out.iterator
-          .filter { case (t, _) => rc.getOrElse(t, 0) == 1 }
-          .map { case (t, v) => t -> v.distinct.toSeq }
-          .toMap
-    }
-  }
-
-  /** Per-table string-RANGE bounds from WHERE conjuncts —
-    * `v >= 'b' AND v < 'c'` → ("t" → Seq(("v", Some("b"), Some("c"))))
-    * — the zone-map harvest behind [[BloomStore.skipFilesRange]].
-    * Attribution rules and string-literal-only soundness exactly as
-    * [[eqLiteralsPerTable]] (both via [[harvestConjuncts]]); `>`/`<`
-    * conservatively widen to their inclusive forms (the boundary file
-    * is kept), and bounds on the same (table, column) tighten by
-    * intersection (max of lows, min of highs), matching AND
-    * semantics.
-    */
-  def strRangesPerTable(rawPlan: LogicalPlan)
-      : Map[String, Seq[(String, Option[String], Option[String])]] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val lo = scala.collection.mutable.Map.empty[(String, String), String]
-    val hi = scala.collection.mutable.Map.empty[(String, String), String]
-    val refCounts = harvestConjuncts(rawPlan) { (c, resolveParts) =>
-      def resolve(e: Expression): Option[(String, String)] =
-        colParts(e).flatMap(resolveParts)
-      def low(k: (String, String), v: String): Unit =
-        lo(k) = lo.get(k).fold(v)(p => if (v > p) v else p)
-      def high(k: (String, String), v: String): Unit =
-        hi(k) = hi.get(k).fold(v)(p => if (v < p) v else p)
-      c match {
-        case GreaterThanOrEqual(a, l) =>
-          for (k <- resolve(a); v <- strLit(l)) low(k, v)
-          for (k <- resolve(l); v <- strLit(a)) high(k, v)
-        case GreaterThan(a, l) =>
-          for (k <- resolve(a); v <- strLit(l)) low(k, v)
-          for (k <- resolve(l); v <- strLit(a)) high(k, v)
-        case LessThanOrEqual(a, l) =>
-          for (k <- resolve(a); v <- strLit(l)) high(k, v)
-          for (k <- resolve(l); v <- strLit(a)) low(k, v)
-        case LessThan(a, l) =>
-          for (k <- resolve(a); v <- strLit(l)) high(k, v)
-          for (k <- resolve(l); v <- strLit(a)) low(k, v)
-        case _ =>
-      }
-    }
-    refCounts match {
-      case None => Map.empty
-      case Some(rc) =>
-        (lo.keySet ++ hi.keySet).iterator
-          .filter { case (t, _) => rc.getOrElse(t, 0) == 1 }
-          .toSeq
-          .groupBy(_._1)
-          .map { case (t, ks) =>
-            t -> ks.sorted.map { k =>
-              (k._2, lo.get(k), hi.get(k))
+          for ((x, l, lower, upper) <- comparisons(c)) {
+            def lo[T](v: T) = Option.when(lower)(v)
+            def hi[T](v: T) = Option.when(upper)(v)
+            for ((t, "timestamp") <- col(uncast(x)); v <- micros(l))
+              acc.get(t).foreach(p =>
+                acc(t) = p.copy(time = and(p.time, lo(v), hi(v))))
+            // `=` on a string column is the equality above
+            if (!c.isInstanceOf[EqualTo])
+              for ((t, cn) <- strCol(x); v <- strLit(l))
+                narrow(t, cn)(b => b.copy(str = and(b.str, lo(v), hi(v))))
+            // ONLY try_cast feeds the numeric zones: a bare coercing
+            // comparison (`col = 5`) and a plain CAST both error at
+            // runtime on uncastable rows under ANSI, so skipping a file
+            // would suppress an error the scan raises, while try_cast
+            // is total (null on failure) and each zone records min/max
+            // of exactly that projection. A narrower integral cast
+            // checks against the BIGINT zone (widening is exact).
+            x match {
+              case cast: Cast if cast.evalMode == EvalMode.TRY =>
+                for ((t, cn) <- col(cast.child)) cast.dataType match {
+                  case ByteType | ShortType | IntegerType | LongType =>
+                    longLit(l).foreach(v => narrow(t, cn)(b =>
+                      b.copy(long = and(b.long, lo(v), hi(v)))))
+                  case DoubleType =>
+                    dblLit(l).foreach(v => narrow(t, cn)(b =>
+                      b.copy(dbl = and(b.dbl, lo(v), hi(v))(
+                        Ordering.Double.TotalOrdering))))
+                  case _ =>
+                }
+              case _ =>
             }
           }
+        }
+      case _ =>
     }
+    acc.toMap
   }
 
-  /** Per-table TYPED numeric range bounds from WHERE conjuncts —
-    * `try_cast(c AS BIGINT) >= 5` → long zone, `try_cast(c AS
-    * DOUBLE) < 1.5` → double zone — the harvest behind
-    * [[BloomStore.skipFilesLongRange]]/[[BloomStore.skipFilesDoubleRange]].
-    * Returns (longRanges, doubleRanges), each per-table like
-    * [[strRangesPerTable]].
-    *
-    * ONLY `try_cast` qualifies, by the same no-coercion soundness
-    * discipline that keeps the string harvest literal-typed:
-    *  - a bare coercing comparison (`col = 5`) and a plain CAST both
-    *    error at runtime on uncastable rows under ANSI — pruning a
-    *    file would silently suppress an error the scan would have
-    *    raised;
-    *  - `try_cast` is total (null on failure), and the zone records
-    *    min/max of EXACTLY that projection, so skip decisions match
-    *    the predicate's row-level semantics.
-    * Narrower integral casts (AS INT/SMALLINT/TINYINT) check against
-    * the BIGINT zone — widening is exact, the zone is only ever
-    * wider. Long-zone literals must be integral; double-zone
-    * literals may be integral, float/double, or decimal (all convert
-    * to the same double the coerced comparison uses). `>`/`<` widen
-    * to their inclusive forms; bounds on one (table, column)
-    * intersect, matching AND semantics.
+  /** A window function's value depends on the other rows of its frame,
+    * so a Project computing one does not let a pruned scan through.
     */
-  def numRangesPerTable(rawPlan: LogicalPlan): (
+  private def windowed(e: Expression): Boolean = e.exists {
+    case _: WindowExpression | _: UnresolvedWindowExpression => true
+    case _ => false
+  }
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  private def disjuncts(e: Expression): Seq[Expression] = e match {
+    case Or(l, r) => disjuncts(l) ++ disjuncts(r)
+    case other => Seq(other)
+  }
+
+  private def uncast(e: Expression): Expression = e match {
+    case c: Cast => uncast(c.child)
+    case other => other
+  }
+
+  /** A comparison as (x, y, y bounds x from below, from above), in both
+    * orientations: only the one whose `x` is a column and `y` a literal
+    * matches a harvest, so a literal-first comparison flips the bound.
+    */
+  private def comparisons(
+      c: Expression): Seq[(Expression, Expression, Boolean, Boolean)] = {
+    val (x, y, lo, hi) = c match {
+      case GreaterThanOrEqual(x, y) => (x, y, true, false)
+      case GreaterThan(x, y) => (x, y, true, false)
+      case LessThanOrEqual(x, y) => (x, y, false, true)
+      case LessThan(x, y) => (x, y, false, true)
+      case EqualTo(x, y) => (x, y, true, true)
+      case _ => return Nil
+    }
+    Seq((x, y, lo, hi), (y, x, hi, lo))
+  }
+
+  /** Micros of a TIMESTAMP literal, or of a string literal (or a CAST
+    * of either) parsed as a UTC date or date-time.
+    */
+  private def micros(e: Expression): Option[Long] = e match {
+    case Literal(v: Long, TimestampType) => Some(v)
+    case Literal(s, StringType) if s != null =>
+      val str = String.valueOf(s)
+      val full = if (str.length == 10) str + " 00:00:00" else str
+      try Some(java.time.LocalDateTime.parse(full.replace(' ', 'T'))
+        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
+      catch { case _: Exception => None }
+    case Cast(c, _, _, _) => micros(c)
+    case _ => None
+  }
+
+  /** Only a plain non-null string literal counts for blooms and string
+    * zones: they hash and bound the column's string form, and type
+    * coercion (`value = 3`) can match rows whose string form differs
+    * from the literal.
+    */
+  private def strLit(e: Expression): Option[String] = e match {
+    case Literal(s, StringType) if s != null => Some(String.valueOf(s))
+    case _ => None
+  }
+
+  /** An integral literal: a BIGINT zone never takes a fractional one
+    * (the comparison then coerces to a type where it sits between
+    * integers).
+    */
+  private def longLit(e: Expression): Option[Long] = e match {
+    case Literal(v: Byte, ByteType) => Some(v.toLong)
+    case Literal(v: Short, ShortType) => Some(v.toLong)
+    case Literal(v: Int, IntegerType) => Some(v.toLong)
+    case Literal(v: Long, LongType) => Some(v)
+    case _ => None
+  }
+
+  /** A numeric literal as the double its coerced comparison uses. NaN
+    * is excluded, so no bound or zone check depends on where NaN
+    * orders.
+    */
+  private def dblLit(e: Expression): Option[Double] = e match {
+    case Literal(v: Double, DoubleType) if !v.isNaN => Some(v)
+    case Literal(v: Float, FloatType) if !v.isNaN => Some(v.toDouble)
+    case Literal(d: Decimal, _) => Some(d.toDouble)
+    case other => longLit(other).map(_.toDouble)
+  }
+
+  /** [[pruning]]'s day range of a query that reads one table, once. */
+  def dayBounds(plan: LogicalPlan): Option[(String, String)] =
+    pruning(plan).values.toSeq match {
+      case Seq(p) => p.days
+      case _ => None
+    }
+
+  /** [[pruning]]'s day range per table. */
+  def dayBoundsPerTable(plan: LogicalPlan): Map[String, (String, String)] =
+    pruning(plan).flatMap { case (t, p) => p.days.map(t -> _) }
+
+  /** [[pruning]]'s string equality/IN lists per table, as
+    * (column, values) sorted by column.
+    */
+  def eqLiteralsPerTable(
+      plan: LogicalPlan): Map[String, Seq[(String, Seq[String])]] =
+    perColumn(pruning(plan))(_.anyOf)
+
+  /** [[pruning]]'s string ranges per table, as (column, lo, hi). */
+  def strRangesPerTable(plan: LogicalPlan)
+      : Map[String, Seq[(String, Option[String], Option[String])]] =
+    ranges(pruning(plan))(_.str)
+
+  /** [[pruning]]'s `try_cast` BIGINT and DOUBLE ranges per table. */
+  def numRangesPerTable(plan: LogicalPlan): (
       Map[String, Seq[(String, Option[Long], Option[Long])]],
       Map[String, Seq[(String, Option[Double], Option[Double])]]) = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def tryCastParts(e: Expression, long: Boolean)
-        : Option[Seq[String]] = e match {
-      case c: Cast if c.evalMode == EvalMode.TRY =>
-        val okType =
-          if (long) c.dataType match {
-            case ByteType | ShortType | IntegerType | LongType => true
-            case _ => false
-          }
-          else c.dataType == DoubleType
-        if (okType) colParts(c.child) else None
-      case _ => None
-    }
-    def longLit(e: Expression): Option[Long] = e match {
-      case Literal(v: Byte, ByteType) => Some(v.toLong)
-      case Literal(v: Short, ShortType) => Some(v.toLong)
-      case Literal(v: Int, IntegerType) => Some(v.toLong)
-      case Literal(v: Long, LongType) => Some(v)
-      case _ => None
-    }
-    def dblLit(e: Expression): Option[Double] = e match {
-      case Literal(v: Double, DoubleType) if !v.isNaN => Some(v)
-      case Literal(v: Float, FloatType) if !v.isNaN => Some(v.toDouble)
-      case Literal(d: org.apache.spark.sql.types.Decimal, _) =>
-        Some(d.toDouble)
-      case other => longLit(other).map(_.toDouble)
-    }
-    val lLo = scala.collection.mutable.Map.empty[(String, String), Long]
-    val lHi = scala.collection.mutable.Map.empty[(String, String), Long]
-    val dLo = scala.collection.mutable.Map.empty[(String, String), Double]
-    val dHi = scala.collection.mutable.Map.empty[(String, String), Double]
-    val refCounts = harvestConjuncts(rawPlan) { (c, resolveParts) =>
-      def rl(e: Expression): Option[(String, String)] =
-        tryCastParts(e, long = true).flatMap(resolveParts)
-      def rd(e: Expression): Option[(String, String)] =
-        tryCastParts(e, long = false).flatMap(resolveParts)
-      def low[T](m: scala.collection.mutable.Map[(String, String), T],
-          k: (String, String), v: T)(implicit o: Ordering[T]): Unit =
-        m(k) = m.get(k).fold(v)(p => if (o.gt(v, p)) v else p)
-      def high[T](m: scala.collection.mutable.Map[(String, String), T],
-          k: (String, String), v: T)(implicit o: Ordering[T]): Unit =
-        m(k) = m.get(k).fold(v)(p => if (o.lt(v, p)) v else p)
-      // double ordering must be Spark's total order (NaN greatest) —
-      // NaN literals are filtered at the source, so IEEE vs total
-      // order cannot diverge here, but stay explicit
-      implicit val dOrd: Ordering[Double] =
-        (a, b) => java.lang.Double.compare(a, b)
-      def visitSide(a: Expression, l: Expression,
-          aIsLowBound: Boolean): Unit = {
-        for (k <- rl(a); v <- longLit(l))
-          if (aIsLowBound) low(lLo, k, v) else high(lHi, k, v)
-        for (k <- rd(a); v <- dblLit(l))
-          if (aIsLowBound) low(dLo, k, v) else high(dHi, k, v)
-      }
-      c match {
-        case GreaterThanOrEqual(a, l) =>
-          visitSide(a, l, aIsLowBound = true)
-          visitSide(l, a, aIsLowBound = false)
-        case GreaterThan(a, l) =>
-          visitSide(a, l, aIsLowBound = true)
-          visitSide(l, a, aIsLowBound = false)
-        case LessThanOrEqual(a, l) =>
-          visitSide(a, l, aIsLowBound = false)
-          visitSide(l, a, aIsLowBound = true)
-        case LessThan(a, l) =>
-          visitSide(a, l, aIsLowBound = false)
-          visitSide(l, a, aIsLowBound = true)
-        case EqualTo(a, l) =>
-          visitSide(a, l, aIsLowBound = true)
-          visitSide(a, l, aIsLowBound = false)
-          visitSide(l, a, aIsLowBound = true)
-          visitSide(l, a, aIsLowBound = false)
-        case _ =>
-      }
-    }
-    refCounts match {
-      case None => (Map.empty, Map.empty)
-      case Some(rc) =>
-        def collect[T](
-            lo: scala.collection.mutable.Map[(String, String), T],
-            hi: scala.collection.mutable.Map[(String, String), T])
-            : Map[String, Seq[(String, Option[T], Option[T])]] =
-          (lo.keySet ++ hi.keySet).iterator
-            .filter { case (t, _) => rc.getOrElse(t, 0) == 1 }
-            .toSeq
-            .groupBy(_._1)
-            .map { case (t, ks) =>
-              t -> ks.sorted.map(k => (k._2, lo.get(k), hi.get(k)))
-            }
-        (collect(lLo, lHi), collect(dLo, dHi))
-    }
+    val p = pruning(plan)
+    (ranges(p)(_.long), ranges(p)(_.dbl))
   }
 
-  /** Dynamic schema inference (reference lynx.rs:93-134): fixed
-    * non-nullable `timestamp`/`value` columns, one nullable string
-    * column per tag key carried by the snapshot's rows, sorted; rows
-    * missing a tag get NULL; numeric tags stringify. Reads the
-    * snapshot's key lists, not its rows.
-    */
-  def inferSchema(parts: TreeMap[String, MeasurementsView]): StructType =
-    BufferScan.schema(parts)
+  private def perColumn[T](p: Map[String, Pruning])(
+      f: Bounds => Seq[T]): Map[String, Seq[(String, T)]] =
+    p.map { case (t, pr) => t -> pr.columns.toSeq.sortBy(_._1)
+      .flatMap { case (c, b) => f(b).map(c -> _) } }
+      .filter(_._2.nonEmpty)
+
+  private def ranges[T](p: Map[String, Pruning])(f: Bounds => Option[
+      Interval[T]]): Map[String, Seq[(String, Option[T], Option[T])]] =
+    perColumn(p)(f(_).toSeq).map { case (t, rs) =>
+      t -> rs.map { case (c, r) => (c, r.lo, r.hi) }
+    }
 
   /** A table snapshot as a DataFrame: a scan over its column chunks
     * (see [[graft.buffer.BufferScan]]).

@@ -381,6 +381,8 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
           s""","result_cache_misses":${engine.resultCacheMisses.get}""" +
           s""","tier_schema_cache_hits":$schemaHits""" +
           s""","tier_schema_cache_misses":$schemaMisses""" +
+          s""","prune_files_total":${engine.pruneFilesTotal.get}""" +
+          s""","prune_files_read":${engine.pruneFilesRead.get}""" +
           s""","wal_replay_ms":${engine.walReplayMs}""" +
           s""","wal_replayed_records":${engine.walReplayedRecords}""" +
           annDrift + hwmJson + recovJson + "}")

@@ -591,15 +591,7 @@ final class ParquetTier(root: File,
       files: Seq[String], dayBounds: Option[(String, String)],
       schema: StructType): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val inRange: String => Boolean = dayBounds match {
-      case Some((lo, hi)) => path =>
-        ParquetTier.DayFromPath.findFirstMatchIn(path) match {
-          case Some(m) => val d = m.group(1); d >= lo && d <= hi
-          case None => true
-        }
-      case None => _ => true
-    }
-    val listed = files.filter(inRange)
+    val listed = files.filter(ParquetTier.inDays(dayBounds))
     // all files pruned: keep one so the scan has a path; the day
     // filter below removes every row without scanning data
     val toRead = if (listed.nonEmpty) listed else files.take(1)
@@ -991,6 +983,16 @@ object ParquetTier {
 
   /** Extracts the day value from a data-file path's partition dir. */
   private[graft] val DayFromPath = """__lynx_day=(\d{4}-\d{2}-\d{2})/""".r
+
+  /** Whether a data file's day lies in the inclusive `dayBounds`
+    * (yyyy-MM-dd); a path without a parsable day is kept.
+    */
+  def inDays(dayBounds: Option[(String, String)])(path: String): Boolean =
+    dayBounds.forall { case (lo, hi) =>
+      DayFromPath.findFirstMatchIn(path).forall { m =>
+        val d = m.group(1); d >= lo && d <= hi
+      }
+    }
 
   /** Minimal JSON string escaping for snapshot manifests (paths and
     * identifiers; control chars included for safety).

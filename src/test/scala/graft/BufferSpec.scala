@@ -6,7 +6,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.buffer.{Measurements, MeasurementsView, MemBuffer, PartitionKey}
+import graft.buffer.{BufferScan, Measurements, MeasurementsView, MemBuffer,
+  PartitionKey}
 import graft.core.{TagNumber, TagString, TagValue, WriteRequest}
 import graft.engine.LynxEngine
 
@@ -135,7 +136,7 @@ class BufferSpec extends AnyFunSuite {
     b.insert(WriteRequest("ns", "t", "c", tags("k3"), DayUs + 2))
     b.insert(WriteRequest("ns", "t", "d", Map("late" -> TagNumber(7)), DayUs + 3))
     def cols(p: TreeMap[String, MeasurementsView]) =
-      LynxEngine.inferSchema(p).fieldNames.toSeq.drop(2)
+      BufferScan.schema(p).fieldNames.toSeq.drop(2)
     val day2 = TreeMap("1970-01-02" -> before("1970-01-02"))
     assert(cols(day2) == Seq("k1", "k2", "k4"))
     assert(cols(before) == Seq("k1", "k2", "k3", "k4"))

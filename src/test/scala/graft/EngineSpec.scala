@@ -126,29 +126,29 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("gatekeeper rejects non-SELECT and FROM-less SQL (lynx.rs:389-401)") {
-    val s = SparkFixture.spark
-    assert(LynxEngine.referencedTables(s, "SELECT * FROM foo") == Seq("foo"))
-    assert(LynxEngine.referencedTables(s,
-      "SELECT name, age FROM people") == Seq("people"))
+    def tables(sql: String) =
+      LynxEngine.referencedTables(LynxEngine.parse(SparkFixture.spark, sql))
+    assert(tables("SELECT * FROM foo") == Seq("foo"))
+    assert(tables("SELECT name, age FROM people") == Seq("people"))
     intercept[IllegalArgumentException] {
-      LynxEngine.referencedTables(s, "SELECT *")
+      tables("SELECT *")
     }
     intercept[IllegalArgumentException] {
-      LynxEngine.referencedTables(s, "INSERT INTO my_table (id) VALUES (1)")
+      tables("INSERT INTO my_table (id) VALUES (1)")
     }
     intercept[IllegalArgumentException] {
-      LynxEngine.referencedTables(s, "DROP TABLE foo")
+      tables("DROP TABLE foo")
     }
     // CTAS/CACHE AS SELECT contain an UnresolvedRelation but are DDL
     intercept[IllegalArgumentException] {
-      LynxEngine.referencedTables(s, "CREATE TABLE p AS SELECT * FROM foo")
+      tables("CREATE TABLE p AS SELECT * FROM foo")
     }
     intercept[IllegalArgumentException] {
-      LynxEngine.referencedTables(s, "CACHE TABLE p AS SELECT * FROM foo")
+      tables("CACHE TABLE p AS SELECT * FROM foo")
     }
     // relations inside subquery expressions are collected
-    assert(LynxEngine.referencedTables(s,
-      "SELECT * FROM a WHERE x IN (SELECT y FROM b)").toSet == Set("a", "b"))
+    assert(tables("SELECT * FROM a WHERE x IN (SELECT y FROM b)").toSet ==
+      Set("a", "b"))
   }
 
   test("WAL replay restores queryability across restarts (wal.rs:465-547)") {
@@ -276,6 +276,19 @@ class EngineSpec extends AnyFunSuite {
     assert(bounds(
       """SELECT * FROM (SELECT * FROM cpu ORDER BY timestamp
         |LIMIT 2) d WHERE timestamp >=
+        |TIMESTAMP '1970-01-03 00:00:00'"""
+        .stripMargin.replace("\n", " ")).isEmpty)
+    // a projection that renames `timestamp` still prunes through the
+    // new name; a window function between filter and scan stops it
+    // (pruning would change the rows the window numbers)
+    assert(bounds(
+      """SELECT * FROM (SELECT timestamp AS ts, value FROM cpu) d
+        |WHERE ts >= TIMESTAMP '1970-01-03 00:00:00'"""
+        .stripMargin.replace("\n", " "))
+      .contains(("1970-01-03", "9999-12-31")))
+    assert(bounds(
+      """SELECT * FROM (SELECT *, row_number() OVER (ORDER BY timestamp)
+        |AS rn FROM cpu) d WHERE timestamp >=
         |TIMESTAMP '1970-01-03 00:00:00'"""
         .stripMargin.replace("\n", " ")).isEmpty)
     // aggregation between filter and scan: HAVING-style outer
@@ -1090,6 +1103,17 @@ class EngineSpec extends AnyFunSuite {
         "ORDER BY value").get
     assert(ror.rows.map(_.getString(0)) == Seq("h2-0", "h2-1", "h2-2"),
       "bloom-pruned OR-equality query must return exactly h2's rows")
+    // the literal above a pass-through derived table prunes its scan
+    // too, and the file counters see both skipped files
+    assert(eqs("SELECT * FROM (SELECT timestamp, host FROM cpu) d " +
+      "WHERE d.host = 'h2'") == Map("cpu" -> Seq("host" -> Seq("h2"))))
+    val (total0, read0) = (e.pruneFilesTotal.get, e.pruneFilesRead.get)
+    val rdt = e.query("ns", "SELECT value FROM (SELECT * FROM cpu) d " +
+      "WHERE host = 'h2' ORDER BY value").get
+    assert(rdt.rows.map(_.getString(0)) == Seq("h2-0", "h2-1", "h2-2"),
+      "bloom-pruned derived-table query must return exactly h2's rows")
+    assert(e.pruneFilesTotal.get - total0 == files.size &&
+      e.pruneFilesRead.get - read0 == kept.size)
     // range-only predicate: zone maps alone must skip the corrupted
     // h1/h3 files (no equality conjunct, so the blooms are idle)
     val rrange = e.query("ns",
@@ -1743,7 +1767,7 @@ class EngineSpec extends AnyFunSuite {
     // what a row-relation frame (Row objects in a LocalRelation) of the
     // same rows writes, staged into a scratch tier
     val drained = e.buffer.tables("ns").get("cpu")
-    val schema = LynxEngine.inferSchema(drained)
+    val schema = graft.buffer.BufferScan.schema(drained)
     val asRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
     drained.valuesIterator.foreach { v =>
       v.timestamps.indices.foreach { i =>
@@ -1970,12 +1994,13 @@ class EngineSpec extends AnyFunSuite {
         "SELECT max(x) FROM cpu) AS m FROM cpu",
       "SELECT count(*) AS n, (WITH cpu AS (SELECT 1 AS x) " +
         "SELECT max(x) FROM CPU) AS m FROM cpu").foreach { q =>
-      assert(LynxEngine.referencedTables(s, q) == Seq("cpu"), q)
+      assert(LynxEngine.referencedTables(LynxEngine.parse(s, q)) ==
+        Seq("cpu"), q)
       assert(e.query("ns", q).get.rows.map(_.toSeq) == Seq(Seq(3L, 1)), q)
     }
     // a query reading only WITH definitions reads no table
-    assert(LynxEngine.referencedTables(s,
-      "WITH Cpu AS (SELECT 1 AS x) SELECT x FROM cpu") == Nil)
+    assert(LynxEngine.referencedTables(LynxEngine.parse(s,
+      "WITH Cpu AS (SELECT 1 AS x) SELECT x FROM cpu")) == Nil)
   }
 
   test("live heap stays flat as queries run") {

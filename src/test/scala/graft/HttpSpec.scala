@@ -63,6 +63,9 @@ class HttpSpec extends AnyFunSuite {
         // no tier on this server: the schema cache is never consulted
         m.contains("\"tier_schema_cache_hits\":0") &&
         m.contains("\"tier_schema_cache_misses\":0") &&
+        // ...nor is any tier file pinned or read
+        m.contains("\"prune_files_total\":0") &&
+        m.contains("\"prune_files_read\":0") &&
         // startup replay of an empty WAL directory
         m.contains("\"wal_replay_ms\":") &&
         m.contains("\"wal_replayed_records\":0"),
