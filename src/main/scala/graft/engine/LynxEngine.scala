@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast,
   UnresolvedWindowExpression, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Distinct, Filter, Join,
   LogicalPlan, Project, Sort, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.types._
 
@@ -854,7 +855,8 @@ class LynxEngine(
     // what the WHERE clauses prove about each table, in one walk:
     // the day range and the bloom/zone checks its tier files must pass
     // (the pruning the reference lacks, SURVEY.md §4.1)
-    val pruning = LynxEngine.pruning(plan)
+    val pruning = LynxEngine.pruning(plan,
+      querySession.sessionState.conf.sessionLocalTimeZone)
     // as-of reads bypass the cache: they are rare ops reads over
     // immutable manifests, not worth a key-shape extension
     val cacheable = resultCacheEntries > 0 && !isExplain &&
@@ -1417,14 +1419,18 @@ object LynxEngine {
     * tables, CTEs and projections that pass or rename a scan column.
     * Never over-prunes: the SQL re-applies the full predicate after
     * the skip, and any shape this walk cannot prove is left unpruned.
-    * Day bounds come from `timestamp` comparisons under any CAST with
-    * a TIMESTAMP or parsable string literal (or a CAST of one); the
-    * string checks from `=`, IN, OR-of-equalities on one column and
-    * ranges with string literals; numeric zones from `try_cast`
-    * ranges. `>`/`<` widen to their inclusive forms (the boundary is
-    * kept), and bounds on one column intersect, matching AND.
+    * Day bounds come from `timestamp` comparisons with a TIMESTAMP,
+    * DATE or string literal (or CASTs of one), read in the session
+    * time zone `zone` ([[timeBounds]]); the string checks from `=`, IN,
+    * OR-of-equalities on one column and ranges with string literals;
+    * numeric zones from `try_cast` ranges. `>`/`<` widen to their
+    * inclusive forms (the boundary is kept), and bounds on one column
+    * intersect, matching AND. `zone` defaults to that of the thread's
+    * active session, and to UTC on a thread with none (never the JVM
+    * default zone, which no query session reads in unless configured).
     */
-  def pruning(rawPlan: LogicalPlan): Map[String, Pruning] = {
+  def pruning(rawPlan: LogicalPlan,
+      zone: String = activeZone): Map[String, Pruning] = {
     val plan = inlineCtes(rawPlan)
     // a subquery expression could carry outer references past the
     // walk, and a recursive WITH (never inlined) derives the rows it
@@ -1486,9 +1492,10 @@ object LynxEngine {
           for ((x, l, lower, upper) <- comparisons(c)) {
             def lo[T](v: T) = Option.when(lower)(v)
             def hi[T](v: T) = Option.when(upper)(v)
-            for ((t, "timestamp") <- col(uncast(x)); v <- micros(l))
+            for ((ts, from, to) <- timeBounds(x, l, zone);
+                (t, "timestamp") <- col(ts))
               acc.get(t).foreach(p =>
-                acc(t) = p.copy(time = and(p.time, lo(v), hi(v))))
+                acc(t) = p.copy(time = and(p.time, lo(from), hi(to))))
             // `=` on a string column is the equality above
             if (!c.isInstanceOf[EqualTo])
               for ((t, cn) <- strCol(x); v <- strLit(l))
@@ -1539,11 +1546,6 @@ object LynxEngine {
     case other => Seq(other)
   }
 
-  private def uncast(e: Expression): Expression = e match {
-    case c: Cast => uncast(c.child)
-    case other => other
-  }
-
   /** A comparison as (x, y, y bounds x from below, from above), in both
     * orientations: only the one whose `x` is a column and `y` a literal
     * matches a harvest, so a literal-first comparison flips the bound.
@@ -1561,20 +1563,64 @@ object LynxEngine {
     Seq((x, y, lo, hi), (y, x, hi, lo))
   }
 
-  /** Micros of a TIMESTAMP literal, or of a string literal (or a CAST
-    * of either) parsed as a UTC date or date-time.
+  /** A comparison of `x` with literal `l` as the analyzer reads it in
+    * the session time zone `zone`: the expression that must be the
+    * `timestamp` column, and the first and last instant it can hold at
+    * the bound.
+    *  - `timestamp`, bare or under CASTs to TIMESTAMP, compares with the
+    *    instant `l` casts to.
+    *  - Under a CAST to DATE it compares by local day, with the day `l`
+    *    casts to.
+    *  - Under a CAST to STRING it compares as text, which orders by the
+    *    first ten characters when `l` is a string that starts with a
+    *    yyyy-MM-dd date.
+    * A local day bounds the scan by all of it, first to last instant.
     */
-  private def micros(e: Expression): Option[Long] = e match {
-    case Literal(v: Long, TimestampType) => Some(v)
-    case Literal(s, StringType) if s != null =>
-      val str = String.valueOf(s)
-      val full = if (str.length == 10) str + " 00:00:00" else str
-      try Some(java.time.LocalDateTime.parse(full.replace(' ', 'T'))
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L)
-      catch { case _: Exception => None }
-    case Cast(c, _, _, _) => micros(c)
-    case _ => None
+  private def timeBounds(x: Expression, l: Expression,
+      zone: String): Option[(Expression, Long, Long)] = {
+    def wholeDay(c: Expression)(day: Any) = {
+      val (d, z) = (day.asInstanceOf[Int], DateTimeUtils.getZoneId(zone))
+      (uncastTimestamp(c), DateTimeUtils.daysToMicros(d, z),
+        DateTimeUtils.daysToMicros(d + 1, z) - 1)
+    }
+    x match {
+      case Cast(c, DateType, _, _) =>
+        castLiteral(l, DateType, zone).map(wholeDay(c))
+      case Cast(c, _: StringType, _, _) => l match {
+        case Literal(s, _: StringType) if s != null =>
+          DatePrefix.findPrefixMatchOf(s.toString).flatMap(m =>
+            castLiteral(Literal(m.matched), DateType, zone)).map(wholeDay(c))
+        case _ => None
+      }
+      case _ => castLiteral(l, TimestampType, zone).map { v =>
+        val us = v.asInstanceOf[Long]
+        (uncastTimestamp(x), us, us)
+      }
+    }
   }
+
+  private def uncastTimestamp(e: Expression): Expression = e match {
+    case Cast(c, TimestampType, _, _) => uncastTimestamp(c)
+    case other => other
+  }
+
+  private val DatePrefix = """\d{4}-\d{2}-\d{2}""".r
+
+  /** A literal made of string, TIMESTAMP and DATE literals and CASTs,
+    * evaluated with Spark's own Cast to `to` in `zone`; None when it is
+    * not one or does not cast.
+    */
+  private def castLiteral(e: Expression, to: DataType,
+      zone: String): Option[Any] =
+    if (e.exists {
+      case _: Cast | Literal(_, _: StringType | TimestampType | DateType) =>
+        false
+      case _ => true
+    }) None
+    else
+      try Option(Cast(e.transform { case c: Cast => c.withTimeZone(zone) },
+        to, Some(zone), EvalMode.TRY).eval())
+      catch { case scala.util.control.NonFatal(_) => None }
 
   /** Only a plain non-null string literal counts for blooms and string
     * zones: they hash and bound the column's string form, and type
@@ -1608,6 +1654,10 @@ object LynxEngine {
     case Literal(d: Decimal, _) => Some(d.toDouble)
     case other => longLit(other).map(_.toDouble)
   }
+
+  /** The time zone of the thread's active session, else UTC. */
+  private def activeZone: String = SparkSession.getActiveSession
+    .fold("UTC")(_.sessionState.conf.sessionLocalTimeZone)
 
   /** [[pruning]]'s day range of a query that reads one table, once. */
   def dayBounds(plan: LogicalPlan): Option[(String, String)] =

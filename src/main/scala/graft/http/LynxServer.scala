@@ -266,7 +266,7 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
     exchangeDir: Option[File] = None) {
   import LynxServer.{errorJson, readBody, respond}
 
-  private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
+  private val server = LynxServer.httpServer(host, port)
   // without an executor every request serializes on the dispatch
   // thread; the reference serves each request on its own tokio task
   // (main.rs:91) and the engine is concurrency-safe (ConcurrencySpec),
@@ -577,6 +577,20 @@ final class LynxServer(engine: LynxEngine, host: String, port: Int,
 }
 
 object LynxServer {
+  /** An unstarted JDK `HttpServer` bound to `host:port` whose
+    * connections send with TCP_NODELAY. The JDK server writes a reply's
+    * headers and its body as two segments; with Nagle's algorithm on,
+    * the body waits for the client to ACK the headers, and a keep-alive
+    * client delays that ACK by up to 40 ms, so every reply with a body
+    * would take 40 ms. The JDK reads `sun.net.httpserver.nodelay` once,
+    * when its `ServerConfig` class loads, so every server of this
+    * process is created here.
+    */
+  def httpServer(host: String, port: Int): HttpServer = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress(host, port), 0)
+  }
+
   /** Largest request body any POST route reads (64 MiB), on the
     * engine and the router alike. A bigger body gets 413 before it is
     * buffered: a Content-Length over the cap is refused unread, and a

@@ -1,10 +1,9 @@
 package graft.http
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 /** Namespace-sharding HTTP router — the SERVING layer of the engine's
   * documented horizontal-scale story. One engine's write plane (WAL +
@@ -69,8 +68,7 @@ final class ShardRouter(host: String, port: Int,
     "shard names must be unique")
 
   private val mapper = new ObjectMapper
-  private val server =
-    HttpServer.create(new InetSocketAddress(host, port), 0)
+  private val server = LynxServer.httpServer(host, port)
   private val pool = java.util.concurrent.Executors.newFixedThreadPool(
     math.max(8, Runtime.getRuntime.availableProcessors()))
   server.setExecutor(pool)

@@ -5,9 +5,15 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /** Columnar tier for sealed buffer data — the 100 TB path the
@@ -211,7 +217,7 @@ final class ParquetTier(root: File,
     val dst = new File(dir, f"v$v%09d.list")
     if (!tmp.renameTo(dst))
       throw new IllegalStateException(s"manifest publish failed: $dst")
-    dropSchema(ns, table)
+    dropResolved(ns, table)
   }
 
   /** Trash records as (createdMillis, supersededVersion, file): the
@@ -554,28 +560,26 @@ final class ParquetTier(root: File,
   def read(spark: SparkSession, ns: String, table: String): DataFrame =
     readFiles(spark, ns, table, dataFiles(ns, table), None)
 
-  /** Read a subset of a pinned file set; `basePath` keeps the
-    * `__lynx_day=` directory parsing so `dayBounds` (inclusive
+  /** Read a subset of a pinned file set; `dayBounds` (inclusive
     * yyyy-MM-dd strings) prunes partitions before any file I/O.
     *
-    * The schema is that of the table's current manifest version when
-    * it lists every one of `files` (see [[readPinned]]), taken from
-    * the per-version cache, so a warm read runs no footer-reading
+    * When the table's current manifest version lists every one of
+    * `files` (see [[readPinned]]), the read goes through that
+    * version's cached resolution, so a warm read runs no footer-reading
     * Spark job and its columns never depend on which files pruning
     * kept. Other files (a pre-manifest table, or a version superseded
-    * since it was pinned) are read with their own merged schema.
+    * since it was pinned) are resolved for this read alone.
     *
     * The day pruning happens on the FILE LIST as well as in a
-    * partition-column filter, so excluded days are never listed or
-    * opened. A file whose day can't be parsed from its path is kept
+    * partition-column filter, so excluded days are never opened. A
+    * file whose day can't be parsed from its path is kept
     * (conservative), and the column filter stays on as the
     * correctness net.
     */
   def readFiles(spark: SparkSession, ns: String, table: String,
       files: Seq[String],
       dayBounds: Option[(String, String)]): DataFrame =
-    scan(spark, ns, table, files, dayBounds,
-      schemaOf(spark, ns, table, files))
+    scan(spark, files, dayBounds, resolvedOf(spark, ns, table, files))
 
   /** [[readFiles]] for a subset `files` of the pinned snapshot `snap`:
     * the schema is that of the snapshot's own manifest version, the
@@ -584,20 +588,32 @@ final class ParquetTier(root: File,
   def readPinned(spark: SparkSession, snap: TierSnapshot,
       files: Seq[String],
       dayBounds: Option[(String, String)]): DataFrame =
-    scan(spark, snap.ns, snap.table, files, dayBounds,
-      versionSchema(spark, snap.ns, snap.table, snap.version, snap.files))
+    scan(spark, files, dayBounds,
+      versionOf(spark, snap.ns, snap.table, snap.version, snap.files))
 
-  private def scan(spark: SparkSession, ns: String, table: String,
-      files: Seq[String], dayBounds: Option[(String, String)],
-      schema: StructType): DataFrame = {
+  /** The one read path behind [[readFiles]], [[readPinned]],
+    * [[readAt]] and so Rollup and BloomStore: the files of `v` that
+    * lie in `dayBounds`, minus `__lynx_day`.
+    *
+    * A published manifest version is immutable, so the first read of
+    * one resolves it through Spark once (merged schema, file statuses,
+    * `__lynx_day` partition values) and caches that beside the schema.
+    * Every later read of the version builds its relation directly: a
+    * `HadoopFsRelation` with `ParquetFileFormat` over a
+    * [[ParquetTier.PinnedIndex]] of the kept files' cached statuses.
+    * A warm read therefore does no DataSource resolution, path glob,
+    * existence check, directory listing or partition inference; only
+    * the files the scan itself opens are touched.
+    */
+  private def scan(spark: SparkSession, files: Seq[String],
+      dayBounds: Option[(String, String)], v: ParquetTier.Resolved)
+      : DataFrame = {
     import org.apache.spark.sql.functions.col
     val listed = files.filter(ParquetTier.inDays(dayBounds))
     // all files pruned: keep one so the scan has a path; the day
     // filter below removes every row without scanning data
     val toRead = if (listed.nonEmpty) listed else files.take(1)
-    val df = spark.read.schema(schema)
-      .option("basePath", tableDir(ns, table).getPath)
-      .parquet(toRead: _*)
+    val df = relation(spark, v, toRead)
     val pruned = dayBounds match {
       case Some((lo, hi)) =>
         df.filter(col(DayCol).cast("string") >= lo &&
@@ -607,55 +623,87 @@ final class ParquetTier(root: File,
     pruned.drop(DayCol)
   }
 
-  // ---------------------------------------------------- version schemas
+  /** `files`, each listed in `v`, as a parquet relation over their
+    * resolved statuses, `__lynx_day` included.
+    */
+  private def relation(spark: SparkSession, v: ParquetTier.Resolved,
+      files: Seq[String]): DataFrame = {
+    val index = new ParquetTier.PinnedIndex(spark, v.partitionSchema,
+      files.map(f => v.files(absolute(f))))
+    val dataSchema = StructType(
+      v.schema.filterNot(f => v.partitionSchema.fieldNames.contains(f.name)))
+    GraftSqlBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+      v.partitionSchema, dataSchema, None, new ParquetFileFormat,
+      Map.empty)(spark), isStreaming = false))
+  }
 
-  // (ns, table) -> the schema of one published version. Publishing a
-  // newer version drops the entry, so at most one version per table
-  // is held and the cache needs no size bound.
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), ParquetTier.VersionSchema]
+  // ---------------------------------------------------- version files
+
+  // (ns, table) -> one published version as Spark resolved it.
+  // Publishing a newer version drops the entry, so at most one version
+  // per table is held and the cache needs no size bound.
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), ParquetTier.Resolved]
   private[graft] val schemaCacheHits = new AtomicLong
   private[graft] val schemaCacheMisses = new AtomicLong
 
-  private def dropSchema(ns: String, table: String): Unit =
-    schemas.remove((ns, table))
+  private def dropResolved(ns: String, table: String): Unit =
+    resolved.remove((ns, table))
 
-  /** Merged schema of `files`, the `__lynx_day` partition column
-    * included: one Spark job that reads every footer. `tolerant` skips
-    * footers that cannot be read.
+  /** `files` as Spark's parquet source resolves them: one Spark job
+    * that merges every footer's schema, plus the listing and partition
+    * inference of the files' day directories. `tolerant` skips footers
+    * that cannot be read.
     */
-  private def inferSchema(spark: SparkSession, ns: String, table: String,
-      files: Seq[String], tolerant: Boolean = false): StructType =
-    spark.read.option("mergeSchema", "true")
+  private def resolve(spark: SparkSession, ns: String, table: String,
+      version: Long, files: Seq[String],
+      tolerant: Boolean = false): ParquetTier.Resolved = {
+    val df = spark.read.option("mergeSchema", "true")
       .option("ignoreCorruptFiles", tolerant.toString)
       .option("basePath", tableDir(ns, table).getPath)
-      .parquet(files: _*).schema
+      .parquet(files: _*)
+    val index = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    } match {
+      case Some(i: PartitioningAwareFileIndex) => i
+      case other => throw new IllegalStateException(
+        s"parquet read of $ns.$table resolved to $other")
+    }
+    val spec = index.partitionSpec()
+    val values = spec.partitions.map(p => p.path -> p.values).toMap
+    val statuses = index.allFiles().map { st =>
+      absolute(st.getPath.toUri.getPath) ->
+        (st, values.getOrElse(st.getPath.getParent, InternalRow.empty))
+    }.toMap
+    ParquetTier.Resolved(version, df.schema, spec.partitionColumns,
+      statuses)
+  }
 
-  /** Schema of manifest `version`, which lists `files`. Published
-    * versions are immutable, so each is inferred once; version 0 (the
-    * pre-manifest directory walk) can change and is inferred on every
+  /** Manifest `version`, which lists `files`, resolved. Published
+    * versions are immutable, so each is resolved once; version 0 (the
+    * pre-manifest directory walk) can change and is resolved on every
     * call. A cached entry serves only the exact file list it was
-    * merged from, so a table rebuilt under the same version numbers
-    * is inferred afresh.
+    * resolved from, so a table rebuilt under the same version numbers
+    * is resolved afresh.
     */
-  private def versionSchema(spark: SparkSession, ns: String,
-      table: String, version: Long, files: Seq[String]): StructType = {
-    val cached = Option(schemas.get((ns, table))).filter(e =>
+  private def versionOf(spark: SparkSession, ns: String,
+      table: String, version: Long,
+      files: Seq[String]): ParquetTier.Resolved = {
+    val cached = Option(resolved.get((ns, table))).filter(e =>
       e.version == version && e.files.size == files.size &&
-        files.forall(f => e.files(absolute(f))))
+        files.forall(f => e.files.contains(absolute(f))))
     cached match {
       case Some(e) =>
         schemaCacheHits.incrementAndGet()
-        e.schema
+        e
       case None =>
         schemaCacheMisses.incrementAndGet()
         try {
-          val s = inferSchema(spark, ns, table, files)
+          val r = resolve(spark, ns, table, version, files)
           if (version > 0)
-            schemas.merge((ns, table),
-              ParquetTier.VersionSchema(version, files.map(absolute).toSet, s),
+            resolved.merge((ns, table), r,
               (old, nu) => if (nu.version >= old.version) nu else old)
-          s
+          r
         } catch {
           // a footer that cannot be read: merge the readable ones for
           // this read only. A scan that reaches the bad file still
@@ -663,16 +711,16 @@ final class ParquetTier(root: File,
           // only the kept files were inferred. Nothing is cached, so a
           // transient read fault is not kept for the version.
           case NonFatal(_) =>
-            inferSchema(spark, ns, table, files, tolerant = true)
+            resolve(spark, ns, table, version, files, tolerant = true)
         }
     }
   }
 
-  /** Schema for [[readFiles]]: the current version's when it lists
-    * all of `files`, else the files' own merged schema.
+  /** Resolution for [[readFiles]]: the current version's when it
+    * lists all of `files`, else the files' own.
     */
-  private def schemaOf(spark: SparkSession, ns: String, table: String,
-      files: Seq[String]): StructType = {
+  private def resolvedOf(spark: SparkSession, ns: String, table: String,
+      files: Seq[String]): ParquetTier.Resolved = {
     val dir = tableDir(ns, table)
     readManifestVersioned(ns, table)
       .map { case (v, rel) => (v, rel.map(new File(dir, _).getPath)) }
@@ -680,15 +728,19 @@ final class ParquetTier(root: File,
         val listed = all.map(absolute).toSet
         files.forall(f => listed(absolute(f)))
       } match {
-        case Some((v, all)) => versionSchema(spark, ns, table, v, all)
+        case Some((v, all)) => versionOf(spark, ns, table, v, all)
         case None =>
           schemaCacheMisses.incrementAndGet()
-          inferSchema(spark, ns, table, files)
+          resolve(spark, ns, table, 0L, files)
       }
   }
 
+  /** `path` absolute and without `.` or `..` segments, as Hadoop's
+    * `Path` normalizes a status path, so a file named through a tier
+    * root such as `./tier` or `../tier` finds its resolved status.
+    */
   private def absolute(path: String): String =
-    new File(path).getAbsolutePath
+    new File(path).toPath.toAbsolutePath.normalize.toString
 
   // ------------------------------------------------- snapshot transfer
 
@@ -840,7 +892,7 @@ final class ParquetTier(root: File,
       val dst = new File(mdir, f"v$version%09d.list")
       if (!tmp.renameTo(dst))
         throw new IllegalStateException(s"manifest publish failed: $dst")
-      dropSchema(ns, table)
+      dropResolved(ns, table)
       pending.delete()
       version
     } finally if (staging.exists()) deleteRecursively(staging)
@@ -940,10 +992,8 @@ final class ParquetTier(root: File,
     val staging = stagingDir(ns, table,
       "compact-" + java.util.UUID.randomUUID())
     val current = currentRel.map(new File(dir, _).getPath)
-    val compacted = spark.read
-      .schema(versionSchema(spark, ns, table, currentVersion, current))
-      .option("basePath", dir.getPath)
-      .parquet(current: _*)
+    val compacted = relation(spark,
+      versionOf(spark, ns, table, currentVersion, current), current)
       .repartition(col(DayCol))
     val clustered =
       if (clusterBy.isEmpty) compacted
@@ -975,11 +1025,37 @@ object ParquetTier {
     */
   val DayCol = "__lynx_day"
 
-  /** The merged schema of one manifest version and the absolute paths
-    * of the files it lists.
+  /** A manifest version as Spark resolved it: its merged `schema`
+    * (the `partitionSchema` column `__lynx_day` included), and each
+    * listed file's status and partition values by absolute path.
     */
-  private final case class VersionSchema(version: Long,
-      files: Set[String], schema: StructType)
+  private final case class Resolved(version: Long, schema: StructType,
+      partitionSchema: StructType,
+      files: Map[String, (FileStatus, InternalRow)])
+
+  /** A file index over statuses already resolved: `files` in order,
+    * each with its partition values. Listing, partition pruning and
+    * size come from [[PartitioningAwareFileIndex]]; nothing here
+    * touches the file system.
+    */
+  private final class PinnedIndex(spark: SparkSession,
+      partitionColumns: StructType, files: Seq[(FileStatus, InternalRow)])
+      extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+    private val spec = PartitionSpec(partitionColumns,
+      files.map { case (st, v) => PartitionPath(v, st.getPath.getParent) }
+        .distinctBy(_.path))
+    private val children = files.map(_._1).groupBy(_.getPath.getParent)
+      .map { case (d, sts) => d -> sts.toArray }
+    private val leaves = mutable.LinkedHashMap.from(
+      files.map { case (st, _) => st.getPath -> st })
+    override def partitionSpec(): PartitionSpec = spec
+    override protected def leafFiles
+        : mutable.LinkedHashMap[Path, FileStatus] = leaves
+    override protected def leafDirToChildrenFiles
+        : Map[Path, Array[FileStatus]] = children
+    override def rootPaths: Seq[Path] = files.map(_._1.getPath)
+    override def refresh(): Unit = ()
+  }
 
   /** Extracts the day value from a data-file path's partition dir. */
   private[graft] val DayFromPath = """__lynx_day=(\d{4}-\d{2}-\d{2})/""".r

@@ -327,6 +327,42 @@ class EngineSpec extends AnyFunSuite {
       "CTE-wrapped range must read only the in-range day dirs")
   }
 
+  test("a literal compared with timestamp bounds the days it names in " +
+    "the session time zone, as the analyzer's cast reads it") {
+    val spark = SparkFixture.spark
+    def days(where: String, zone: String) = LynxEngine.pruning(
+      LynxEngine.parse(spark, s"SELECT * FROM cpu WHERE $where"), zone)
+      .get("cpu").flatMap(_.days)
+    val ny = "America/New_York"
+    val tokyo = "Asia/Tokyo"
+    // 22:00 in New York is 03:00 UTC the next day
+    assert(days("timestamp < '2024-01-02 22:00:00'", ny)
+      .contains(("0000-01-01", "2024-01-03")))
+    assert(days("timestamp < '2024-01-02 22:00:00'", "UTC")
+      .contains(("0000-01-01", "2024-01-02")))
+    assert(days("timestamp >= '2024-01-03 01:00:00'", tokyo)
+      .contains(("2024-01-02", "9999-12-31")))
+    assert(days("timestamp >= CAST('2024-01-03' AS DATE)", tokyo)
+      .contains(("2024-01-02", "9999-12-31")))
+    // an explicit offset wins over the zone
+    assert(days("timestamp >= '2024-01-04T01:00:00+14:00'", "UTC")
+      .contains(("2024-01-03", "9999-12-31")))
+    // a DATE or STRING cast compares by local day: the whole day counts
+    assert(days("CAST(timestamp AS DATE) >= '2024-01-04'", tokyo)
+      .contains(("2024-01-03", "9999-12-31")))
+    assert(days("CAST(timestamp AS DATE) <= '2024-01-04'", ny)
+      .contains(("0000-01-01", "2024-01-05")))
+    assert(days("CAST(timestamp AS DATE) = '2024-01-04'", "UTC")
+      .contains(("2024-01-04", "2024-01-04")))
+    assert(days("CAST(timestamp AS STRING) <= '2024-01-04 10:00:00'", ny)
+      .contains(("0000-01-01", "2024-01-05")))
+    // a literal the cast rejects, or text that does not order by its
+    // date, bounds nothing
+    assert(days("timestamp >= 'soon'", "UTC").isEmpty)
+    assert(days("CAST(timestamp AS STRING) <= '2024-1-4'", "UTC").isEmpty)
+    assert(days("CAST(timestamp AS BIGINT) >= '2024-01-04'", "UTC").isEmpty)
+  }
+
   test("multi-table join prunes each table's day partitions " +
     "independently") {
     val spark = SparkFixture.spark
@@ -1900,6 +1936,88 @@ class EngineSpec extends AnyFunSuite {
       val gone = intercept[Exception](e.query("ns", "SELECT b FROM t", Some(1L)))
       assert(gone.getMessage.contains("b"), gone.getMessage)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a warm query over an already-read version checks, globs and " +
+    "lists no path, and reads what a plain parquet read of its files " +
+    "reads; a new version is resolved afresh") {
+    val spark = SparkFixture.spark
+    val root = Files.createTempDirectory("warm-scan").toFile
+    val tier = new ParquetTier(root)
+    val e = newEngine(Some(tier))
+    (0 until 3).foreach(d => e.write(WriteRequest("ns", "t", d.toString,
+      Map("a" -> TagString(s"x$d")), d * dayUs + 1)))
+    e.seal("ns", "t") // v1
+    val sql = "SELECT * FROM t WHERE timestamp >= " +
+      "TIMESTAMP '1970-01-02 00:00:00' ORDER BY timestamp"
+    def query(s: String) = CountingFileSystem.counted(spark)(
+      e.query("ns", s).get.rows.map(_.toSeq))
+    val (cold, rows) = query(sql)
+    assert(cold > 0, "the first read of a version resolves it")
+    assert(rows.map(_(1)) == Seq("1", "2"))
+    // literals differ, so the result cache misses and the tier is read
+    val (warm, again) = query(sql + " ")
+    assert(warm == 0, s"a warm query made $warm file system calls")
+    assert(again == rows)
+    // the rows a plain read of the same files returns, by day bounds
+    val dir = new java.io.File(root, "ns/t").getPath
+    val files = tier.dataFiles("ns", "t")
+    def plain(days: Option[(String, String)]) = {
+      val df = spark.read.option("basePath", dir).parquet(files: _*)
+      days.fold(df) { case (lo, hi) =>
+        df.where(s"CAST(__lynx_day AS STRING) BETWEEN '$lo' AND '$hi'")
+      }.drop("__lynx_day").collect().map(_.toSeq).toSet
+    }
+    for (days <- Seq(None, Some(("1970-01-02", "1970-01-02")),
+        Some(("1971-01-01", "1971-01-01")))) {
+      val (n, pinned) = CountingFileSystem.counted(spark)(
+        tier.readFiles(spark, "ns", "t", files, days)
+          .collect().map(_.toSeq).toSet)
+      assert(n == 0, s"readFiles($days) made $n file system calls")
+      assert(pinned == plain(days), s"days $days")
+    }
+    // a seal publishes v2: resolved once, then warm again
+    e.write(WriteRequest("ns", "t", "3",
+      Map("a" -> TagString("x3"), "b" -> TagString("y")), 3 * dayUs + 1))
+    e.seal("ns", "t")
+    val (v2Cold, v2) = query(sql)
+    assert(v2Cold > 0 && v2.map(_(1)) == Seq("1", "2", "3"))
+    assert(v2.last.last == "y")
+    assert(query(sql + " ")._1 == 0)
+    // compaction publishes v3 over new files
+    e.compact("ns", "t")
+    val (v3Cold, v3) = query(sql)
+    assert(v3Cold > 0 && v3 == v2)
+    assert(query(sql + " ")._1 == 0)
+  }
+
+  test("a tier root named with . and .. segments reads, prunes, " +
+    "compacts and time-travels like a plain one") {
+    val spark = SparkFixture.spark
+    val base = Files.createTempDirectory("dotted-root").toFile
+    new java.io.File(base, "sub").mkdirs()
+    val root = new java.io.File(base, "./sub/../tier")
+    val tier = new ParquetTier(root)
+    val e = newEngine(Some(tier))
+    (0 until 3).foreach(d => e.write(WriteRequest("ns", "t", d.toString,
+      Map.empty, d * dayUs + 1)))
+    e.seal("ns", "t") // v1
+    def values(sql: String) =
+      e.query("ns", sql).get.rows.map(_.getString(1)).toSeq
+    val pruned = "SELECT * FROM t WHERE timestamp >= " +
+      "TIMESTAMP '1970-01-02 00:00:00' ORDER BY timestamp"
+    assert(values(pruned) == Seq("1", "2"))
+    // a second read of the same version goes through the cached entry
+    val hits = tier.schemaCacheHits.get
+    assert(values(pruned + " ") == Seq("1", "2"))
+    assert(tier.schemaCacheHits.get > hits)
+    assert(tier.read(spark, "ns", "t").count() == 3)
+    e.write(WriteRequest("ns", "t", "3", Map.empty, 3 * dayUs + 1))
+    e.seal("ns", "t") // v2
+    tier.compact(spark, "ns", "t") // v3
+    assert(values("SELECT * FROM t ORDER BY timestamp") ==
+      Seq("0", "1", "2", "3"))
+    assert(tier.readAt(spark, "ns", "t", 1L)(_.count()).contains(3L))
   }
 
   test("queries that differ only in numeric and timestamp literals " +

@@ -73,6 +73,24 @@ class HttpSpec extends AnyFunSuite {
     }
   }
 
+  test("replies with a body on a keep-alive connection are not held " +
+    "back by the client's delayed ACK") {
+    withServer { port =>
+      val get = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/metrics")).GET().build()
+      def send(): Unit = {
+        val r = client.send(get, HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200 && r.body().nonEmpty)
+      }
+      (0 until 5).foreach(_ => send())
+      val t0 = System.nanoTime
+      (0 until 20).foreach(_ => send())
+      val ms = (System.nanoTime - t0) / 1e6
+      // a reply whose body waits for the delayed ACK takes >= 40 ms
+      assert(ms < 20 * 20, f"20 replies took $ms%.0f ms")
+    }
+  }
+
   test("a write whose namespace or measurement is not a storable name " +
     "gets 422 with an error body; a valid write still gets 200") {
     withServer { port =>

@@ -98,6 +98,23 @@ class ShardRouterSpec extends AnyFunSuite {
     }
   }
 
+  test("router replies with a body on a keep-alive connection are not " +
+    "held back by the client's delayed ACK") {
+    withCluster(1) { (router, _) =>
+      val rp = router.boundPort
+      def send(): Unit = {
+        val r = post(rp, "/api/v1/shard", """{"namespace":"ns0"}""")
+        assert(r.statusCode() == 200 && r.body().contains("\"shard\":\"s0\""))
+      }
+      (0 until 5).foreach(_ => send())
+      val t0 = System.nanoTime
+      (0 until 20).foreach(_ => send())
+      val ms = (System.nanoTime - t0) / 1e6
+      // a reply whose body waits for the delayed ACK takes >= 40 ms
+      assert(ms < 20 * 20, f"20 replies took $ms%.0f ms")
+    }
+  }
+
   test("adding a shard moves exactly the rendezvous-predicted " +
     "namespace set, every move lands ON the new shard (the " +
     "q_shard_rendezvous invariant at the serving layer)") {
